@@ -2440,8 +2440,9 @@ def _lang_within(spark, sf_dir):
     method through the parser (r11 verdict next #3 — the interval
     join reaches the language): every (purchase, click) pair of the
     same user with the click in the purchase's preceding 24 hours
-    (compile.py::_fm_within lowering to streaming.events.
-    interval_join — the stream_join kernel's shape).  Unlike asof()
+    (the compile.py FLOW_METHODS "within" row, _fm_within lowering
+    to streaming.events.interval_join — the stream_join kernel's
+    shape).  Unlike asof()
     this emits ALL matches as a new row grain, and the same query
     text is streaming-legal on BOTH sides (see stream_lang_join).
     The oracle is the plain ANSI range-predicate join."""
@@ -2566,9 +2567,10 @@ def _lang_freq(spark, sf_dir):
     """freq(expr, group...) flow method through the parser (r10
     verdict next #5 — the last API-only sketch family, CMS, reaches
     the language): grouped point-frequency estimates of event_type
-    per user via ONE Count-Min matrix (compile.py::_fm_freq lowering
-    to sketches.cms_build/cms_estimate; groups fold into the hashed
-    composite so the matrix is d·w longs at any corpus size).
+    per user via ONE Count-Min matrix (the compile.py FLOW_METHODS
+    "freq" row, whose _cms_one lowers to sketches.cms_build/
+    cms_estimate; groups fold into the hashed composite so the
+    matrix is d·w longs at any corpus size).
     Certificate form like op_cms: the gate-checked values are the
     exact counts plus the CMS guarantees — never an underestimate,
     overestimate within the carried additive bound ``err`` = ⌈ε·n⌉."""
@@ -2600,8 +2602,9 @@ def _lang_freq(spark, sf_dir):
 
 def _lang_hist(spark, sf_dir):
     """hist(expr, buckets) flow method through the parser — the
-    equi-depth histogram reshape (compile.py::_fm_hist lowering to
-    olap.equi_depth_histogram, the op_histogram kernel) composed
+    equi-depth histogram reshape (the compile.py FLOW_METHODS "hist"
+    row, _fm_hist lowering to olap.equi_depth_histogram, the
+    op_histogram kernel) composed
     after a sieve: exact interpolated quintile boundaries + bucket
     counts over the filtered orders, oracle-replayed bit-for-bit by
     DuckDB's quantile_cont."""

@@ -28,6 +28,13 @@ physical join/agg algorithms):
 
 from __future__ import annotations
 
+import decimal
+import functools
+import importlib
+import math
+import re
+from typing import Callable, NamedTuple
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -176,7 +183,7 @@ class Compiler:
             return self.eval(ctx, scope, rv)
         if isinstance(node, N.Compose):
             base = self.eval(ctx, scope, node.base)
-            return self.eval_member(ctx, scope, base, node.op)
+            return self.eval_member(ctx, base, node.op)
         if isinstance(node, N.Apply):
             return self.apply_function(ctx, scope, node.name, node.args)
         if isinstance(node, N.Operator):
@@ -448,7 +455,7 @@ class Compiler:
         return v
 
     # -- member / composition -----------------------------------------
-    def eval_member(self, ctx: Ctx, outer: ScopeRef, base, op: N.Node):
+    def eval_member(self, ctx: Ctx, base, op: N.Node):
         if isinstance(base, Scalar):
             raise CompileError(f"cannot compose into a scalar ({base.hint!r})")
         if isinstance(base, NamespaceRef):
@@ -469,10 +476,10 @@ class Compiler:
                 raise CompileError("'*' must appear inside a selection")
             return v
         if isinstance(base, FlowV):
-            return self.eval_flow_member(ctx, outer, base, op)
+            return self.eval_flow_member(ctx, base, op)
         raise CompileError("invalid composition")
 
-    def eval_flow_member(self, ctx: Ctx, outer: ScopeRef, v: FlowV, op: N.Node):
+    def eval_flow_member(self, ctx: Ctx, v: FlowV, op: N.Node):
         flow = v.flow
         scope = ScopeRef(flow, flow.alias, flow.table)
         self._inject_refs(ctx, v, op)
@@ -490,7 +497,7 @@ class Compiler:
             return self.absorb(v, r)
         if isinstance(op, N.Apply):
             if op.name in FLOW_METHODS:
-                return FLOW_METHODS[op.name](self, ctx, outer, v, op.args)
+                return _call_flow_method(self, ctx, v, op.name, op.args)
             r = self.apply_function(ctx, scope, op.name, op.args)
             return self.absorb(v, r)
         if isinstance(op, N.Wildcard):
@@ -1228,15 +1235,13 @@ class Compiler:
         if name in self.engine.gateways and len(args) == 1:
             return self._gateway_flow(name, args[0])
         if key in FLOW_METHODS and scope.table is not None:
-            v = FlowV(scope.flow, hint=name)
-            return FLOW_METHODS[key](self, ctx, scope, v, args)
+            return _call_flow_method(self, ctx, FlowV(scope.flow, hint=name), key, args)
         if key in fnlib.AGGREGATES:
             return fnlib.apply_aggregate(self, ctx, scope, key, args)
         if key in fnlib.SCALARS:
             return fnlib.SCALARS[key](self, ctx, scope, args)
         if key in FLOW_METHODS:
-            v = FlowV(scope.flow, hint=name)
-            return FLOW_METHODS[key](self, ctx, scope, v, args)
+            return _call_flow_method(self, ctx, FlowV(scope.flow, hint=name), key, args)
         raise CompileError(f"unknown function '{name}'")
 
 
@@ -1287,12 +1292,103 @@ class Compiler:
 
 # ----------------------------------------------------------------------
 # flow methods (postfix flow functions)
+#
+# FLOW_METHODS (end of this section) is the single description of every
+# flow method: the signature its errors name, its argument range, the
+# table columns it requires, whether it is batch-only, and its binder.
+# _call_flow_method checks all of them, in that order, BEFORE the binder
+# runs: budget, mix, cluster, heavy_hitters and freq start Spark jobs
+# while the DataFrame is built, so no user error may surface after one.
+# Binders take (cc, ctx, v, args, name) and return the flow value; the
+# five repeated shapes (appenders, join-back scorers, pair droppers,
+# events reshapes, sketch reshapes) are factories that return rows.
 # ----------------------------------------------------------------------
-def _fm_sort(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    if not args:
-        raise CompileError("sort() needs at least one ordering key")
+class FlowMethod(NamedTuple):
+    sig: str  # the call shape arity errors name
+    lo: int
+    hi: int | None  # None: unbounded
+    bind: Callable
+    needs: tuple = ()  # ((columns, hint), ...) the flow's table must carry
+    batch: bool = False
+    takes: str | None = None  # arity message when lo..hi does not say it
+    step: int = 1  # accepted counts are lo, lo+step, ... (mix: pairs)
+
+
+_TEXT = (("text",), "e.g. /documents")
+_LANG = (("lang",), "the bucketing key")
+_EMBEDDING = (("embedding",), "e.g. /embeddings")
+_COUNTS = {1: "one argument", 2: "two arguments"}
+
+
+def _events_need(*cols: str) -> tuple:
+    return ((cols, "e.g. /events"),)
+
+
+def _call_flow_method(cc: Compiler, ctx: Ctx, v: FlowV, name: str, args):
+    m = FLOW_METHODS[name]
+    n = len(args)
+    if n < m.lo or (m.hi is not None and n > m.hi) or (n - m.lo) % m.step:
+        if m.takes:
+            raise CompileError(f"{m.sig} {m.takes}")
+        if m.hi == 0:
+            raise CompileError(f"{m.sig} takes no arguments")
+        if m.lo == 0:
+            raise CompileError(f"{m.sig} takes at most {_COUNTS[m.hi]}")
+        raise CompileError(f"{m.sig} takes {m.lo} or {m.hi} arguments")
+    table = v.flow.table
+    for cols, hint in m.needs:
+        if table is None or any(c not in table.columns for c in cols):
+            if len(cols) == 1:
+                what = f"{'an' if cols[0][0] in 'aeiou' else 'a'} '{cols[0]}' column"
+            else:
+                what = ", ".join(f"'{c}'" for c in cols) + " columns"
+            raise CompileError(
+                f"{name}() requires a flow over a table with {what} ({hint})"
+            )
+    # The EAGER model-state methods run compile-time Spark jobs (sketch
+    # builds, per-partition counts, iterative contractions) a streaming
+    # flow cannot execute: under df_stream they fail as a NAMED error
+    # with the remedy, not as the kernel's opaque 'Queries with
+    # streaming sources must be executed with writeStream.start()'
+    # (same spirit as the theta_join batch-only guard).  Only flagged
+    # rows pay the isStreaming call.
+    if m.batch and v.flow.df.isStreaming:
+        raise CompileError(
+            f"{name}() is batch-only — it runs compile-time model"
+            " jobs a stream cannot execute; drain the stream first"
+            " (run_stream) or query the batch mount"
+        )
+    return m.bind(cc, ctx, v, args, name)
+
+
+def _op(path: str, **fixed):
+    """The kernel at ``path`` (``module.function`` under this package),
+    imported on first call: the operator modules load pandas and numpy,
+    which navigational queries never need.  ``fixed`` pins keyword
+    arguments."""
+    mod, _, fn = path.rpartition(".")
+
+    def call(*args, **kw):
+        kernel = getattr(importlib.import_module(f".{mod}", __package__), fn)
+        return kernel(*args, **fixed, **kw)
+
+    return call
+
+
+def _scope(flow) -> ScopeRef:
+    return ScopeRef(flow, flow.alias, flow.table)
+
+
+def _fm_narrow(flow, key: Column, cols, *extra: Column) -> DataFrame:
+    """The narrow ``(doc_id, <cols>...)`` projection a kernel runs on."""
+    return flow.df.select(
+        key.alias("doc_id"), *[F.col(flow.scope_col(c)).alias(c) for c in cols], *extra
+    )
+
+
+def _fm_sort(cc: Compiler, ctx: Ctx, v: FlowV, args, name: str):
     flow = v.flow
-    scope = ScopeRef(flow, flow.alias, flow.table)
+    scope = _scope(flow)
     keys: list[tuple[str, bool]] = []
     newcols: dict[str, Column] = {}
     for a in args:
@@ -1313,16 +1409,14 @@ def _fm_sort(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     return v
 
 
-def _fm_limit(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """limit(n[, skip]) — global on the output flow, per-parent
-    ``row_number`` window when correlated (reference:
+def _fm_limit(cc: Compiler, ctx: Ctx, v: FlowV, args, name: str):
+    """limit(n[, skip]) and top(n[, skip]) — global on the output flow,
+    per-parent ``row_number`` window when correlated (reference:
     src/htsql/core/tr/space.py::ClippedSpace)."""
-    if not args or len(args) > 2:
-        raise CompileError("limit(n[, skip]) takes 1 or 2 arguments")
     vals = []
     for a in args:
         if not (isinstance(a, N.Literal) and isinstance(a.value, int)):
-            raise CompileError("limit() arguments must be integer literals")
+            raise CompileError(f"{name}() arguments must be integer literals")
         vals.append(a.value)
     n = vals[0]
     skip = vals[1] if len(vals) > 1 else 0
@@ -1346,97 +1440,14 @@ def _fm_limit(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     return v
 
 
-def _fm_top(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    return _fm_limit(cc, ctx, outer, v, args)
-
-
-def _fm_define(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    if not args:
-        raise CompileError("define() needs at least one name := expr argument")
+def _fm_define(cc: Compiler, ctx: Ctx, v: FlowV, args, name: str):
     for a in args:
         if not isinstance(a, N.Assignment):
             raise CompileError("define() takes name := expr arguments")
         if a.is_reference:
-            scope = ScopeRef(v.flow, v.flow.alias, v.flow.table)
-            cc.bind_reference(ctx, scope, a.name, a.expr)
+            cc.bind_reference(ctx, _scope(v.flow), a.name, a.expr)
         else:
             ctx.names[a.name] = a.expr
-    return v
-
-
-def _fm_text_col(v: FlowV, method: str) -> str:
-    """The flow's physical text column, required by the text-pipeline
-    flow methods (documents-shaped flows)."""
-    flow = v.flow
-    if flow.table is None or "text" not in flow.table.columns:
-        raise CompileError(
-            f"{method}() requires a flow over a table with a 'text'"
-            " column (e.g. /documents)"
-        )
-    return flow.scope_col("text")
-
-
-def _fm_gopher(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """gopher() — append the Gopher quality-rule signals (Rae '21) as
-    navigable attributes ``gopher_n_words`` … ``gopher_passes``:
-    ``/documents.gopher(){doc_id}?gopher_passes`` is the language form
-    of operators.textstats.gopher_rules (zero shuffle, in-row)."""
-    if args:
-        raise CompileError("gopher() takes no arguments")
-    from .operators.textstats import append_gopher_signals
-
-    flow = v.flow
-    tcol = _fm_text_col(v, "gopher")
-    prefix = cc.engine.fresh("__gop") + "_"
-    flow.df, names = append_gopher_signals(flow.df, text_col=tcol, prefix=prefix)
-    _fm_register_extra(flow, names, prefix, "gopher_")
-    return v
-
-
-def _fm_entropy(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """entropy() — append the lexical-diversity signals ``entropy`` /
-    ``ttr`` / ``n_types`` / ``n_words`` (operators.textstats.
-    token_entropy as a flow method; zero shuffle, one in-row fold)."""
-    if args:
-        raise CompileError("entropy() takes no arguments")
-    from .operators.textstats import append_entropy_signals
-
-    flow = v.flow
-    tcol = _fm_text_col(v, "entropy")
-    prefix = cc.engine.fresh("__ent") + "_"
-    flow.df, names = append_entropy_signals(flow.df, text_col=tcol, prefix=prefix)
-    _fm_register_extra(flow, names, prefix, "")
-    return v
-
-
-def _fm_dedup_exact(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """dedup_exact([key]) — keep only the first (min key) document of
-    every exact-content fingerprint group: the language form of the
-    curation pipeline's exact-dedup stage.  The survivor key defaults
-    to the table's single-column primary key; pass an expression for
-    keyless mounts (``tweak.filedb``-style reflected catalogs have no
-    pk metadata).  ONE shuffle on the fingerprint (a min-over-Window,
-    no join); at 100 TB only the narrow (fp, key) pair drives the
-    exchange while every other column rides along the same
-    partitioning."""
-    if len(args) > 1:
-        raise CompileError("dedup_exact([key]) takes at most one argument")
-    from .operators.textstats import fingerprint
-
-    flow = v.flow
-    tcol = _fm_text_col(v, "dedup_exact")
-    key = _fm_survivor_key(cc, ctx, v, args, "dedup_exact")
-    fpc = cc.engine.fresh("__fp")
-    keyc = cc.engine.fresh("__dk")
-    mnc = cc.engine.fresh("__mn")
-    w = Window.partitionBy(F.col(fpc))
-    flow.df = (
-        flow.df.withColumn(fpc, fingerprint(F.col(tcol)))
-        .withColumn(keyc, key)
-        .withColumn(mnc, F.min(F.col(keyc)).over(w))
-        .filter(F.col(keyc) == F.col(mnc))
-        .drop(fpc, keyc, mnc)
-    )
     return v
 
 
@@ -1448,12 +1459,11 @@ def _fm_survivor_key(
     (shared by every keyed flow method — same contract, same error
     text shape).  ``example`` is the method-correct call to suggest
     on pk-less mounts: for methods whose key is the SECOND argument
-    (tfidf/budget/sample/dsir/unigram) the bare ``method(doc_id)``
+    (tfidf/budget/sample/dsir/pack) the bare ``method(doc_id)``
     suggestion would be wrong — it parses as the first argument."""
     flow = v.flow
     if args:
-        scope = ScopeRef(flow, flow.alias, flow.table)
-        return cc.scalar(ctx, scope, args[0]).col
+        return cc.scalar(ctx, _scope(flow), args[0]).col
     if flow.table is None or not flow.table.pk or len(flow.table.pk) != 1:
         raise CompileError(
             f"{method}() needs a single-column primary key — pass the"
@@ -1471,9 +1481,8 @@ def _fm_register_extra(flow, names: list[str], prefix: str, public: str) -> None
 
 def _fm_join_back(cc: Compiler, flow, key, scored, join_key: str = "doc_id") -> None:
     """Inner-join a narrow scored/expanded table back onto the flow by
-    the survivor key (shared by tfidf/winnow/unigram/dsir/budget —
-    the corpus side keeps its plan; the join ships the key plus the
-    few appended columns)."""
+    the survivor key (the corpus side keeps its plan; the join ships
+    the key plus the few appended columns)."""
     keyc = cc.engine.fresh("__jk")
     flow.df = (
         flow.df.withColumn(keyc, key)
@@ -1495,127 +1504,413 @@ def _fm_drop_losers(cc: Compiler, flow, key, pairs) -> None:
     )
 
 
-def _fm_int_lit(args, i: int, default: int, method: str) -> int:
+def _fm_int_lit(args, i: int, default: int, method: str, least=None, what="") -> int:
     if len(args) <= i:
         return default
     a = args[i]
     if not (isinstance(a, N.Literal) and isinstance(a.value, int)):
         raise CompileError(f"{method}() argument {i + 1} must be an integer literal")
+    if least is not None and a.value < least:
+        raise CompileError(f"{method}() needs {what} >= {least}")
     return a.value
 
 
-def _fm_classify(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """classify() — append the hashed bag-of-words linear-classifier
-    signals ``cls_n_tokens`` / ``cls_score`` / ``cls_keep``
-    (operators.textstats.classifier_scores as a flow method): the
-    model-tier quality filter becomes first-class language surface,
-    ``/documents.classify()?cls_keep{doc_id}``.  Zero shuffle, one
-    narrow codegen'd projection (no explode) — a 100 TB corpus scores
-    at scan speed.  Named classify(), not quality(): ``quality(text)``
-    is the heuristic-tier SCALAR and flow methods shadow scalars in
-    table scope."""
-    if args:
-        raise CompileError("classify() takes no arguments")
-    from .operators.textstats import append_classifier_signals
+def _fm_str_lit(args, i: int, method: str) -> str:
+    a = args[i]
+    if not (isinstance(a, N.Literal) and isinstance(a.value, str)):
+        raise CompileError(f"{method}() argument {i + 1} must be a text literal")
+    return a.value
 
-    flow = v.flow
-    tcol = _fm_text_col(v, "classify")
-    prefix = cc.engine.fresh("__cls") + "_"
-    flow.df, names = append_classifier_signals(flow.df, text_col=tcol, prefix=prefix)
-    _fm_register_extra(flow, names, prefix, "cls_")
+
+def _is_number(a) -> bool:
+    return isinstance(a, N.Literal) and isinstance(a.value, (int, float, decimal.Decimal))
+
+
+def _fm_frac_lit(args, i: int, method: str) -> float:
+    if _is_number(args[i]):
+        return float(args[i].value)
+    raise CompileError(f"{method}() argument {i + 1} must be a numeric literal")
+
+
+def _fm_interval_lit(args, i: int, method: str) -> str:
+    """A window/gap interval literal: 'N seconds|minutes|hours|days'.
+    Validated at compile time so a typo is a CompileError, not a
+    deep AnalysisException out of F.window."""
+    s = _fm_str_lit(args, i, method)
+    if not re.fullmatch(r"[1-9]\d* (second|minute|hour|day)s?", s):
+        raise CompileError(
+            f"{method}() interval must be 'N seconds|minutes|hours|days',"
+            f" got {s!r}"
+        )
+    return s
+
+
+def _fm_flow_arg(cc: Compiler, ctx: Ctx, args, method: str, example: str) -> FlowV:
+    """The flow-valued first argument (a full sub-query evaluated at
+    home scope) of decontaminate()/asof()/within()."""
+    other = cc.eval(ctx, ScopeRef(cc.engine.home_flow(), "", None), args[0])
+    if not isinstance(other, FlowV):
+        raise CompileError(
+            f"{method}() needs a flow argument (a table or a sieved"
+            f" table, e.g. {example})"
+        )
+    return other
+
+
+def _fm_attr_args(args, method: str, whats) -> None:
+    for i, what in enumerate(whats, 1):
+        if not isinstance(args[i], N.Identifier):
+            raise CompileError(f"{method}() {what} argument must be an attribute name")
+
+
+def _appender(sig: str, kernel, tag: str, public: str) -> FlowMethod:
+    """A no-argument text method appending the columns ``kernel``
+    returns as ``{public}*`` attributes: one in-row projection, zero
+    shuffle — a 100 TB corpus is scored at scan speed."""
+
+    def bind(cc, ctx, v, args, name):
+        flow = v.flow
+        prefix = cc.engine.fresh(tag) + "_"
+        flow.df, names = kernel(flow.df, text_col=flow.scope_col("text"), prefix=prefix)
+        _fm_register_extra(flow, names, prefix, public)
+        return v
+
+    return FlowMethod(sig, 0, 0, bind, (_TEXT,))
+
+
+def _scorer(
+    sig, lo, hi, kernel, tag, outs, public,
+    lits=(), target=False, example=None, batch=False,
+) -> FlowMethod:
+    """A text method that runs ``kernel`` on the narrow (doc_id, text)
+    projection and inner-joins its ``outs`` back on the survivor key
+    as ``{public}*`` attributes.  Leading arguments are the integer
+    ``lits`` (kwarg, default, least) or, with ``target``, a boolean
+    expression; the optional key comes last.  A kernel that yields
+    several rows per document expands the flow (plural-expansion
+    semantics: documents with no rows drop out).  The join back ships
+    the key plus a few numbers, never text."""
+    outs = [o if isinstance(o, tuple) else (o, o) for o in outs]
+
+    def bind(cc, ctx, v, args, name):
+        flow = v.flow
+        kw = {
+            kwarg: _fm_int_lit(args, i, default, name, least, kwarg)
+            for i, (kwarg, default, least) in enumerate(lits)
+        }
+        extra = []
+        if target:
+            scope = _scope(flow)
+            pred = fnlib.to_boolean(cc, scope, cc.scalar(ctx, scope, args[0]).col)
+            extra, kw["target"] = [pred.alias("__tgt")], F.col("__tgt")
+        key = _fm_survivor_key(cc, ctx, v, args[len(kw):], name, example)
+        narrow = _fm_narrow(flow, key, ("text",), *extra)
+        prefix = cc.engine.fresh(tag) + "_"
+        scored = kernel(narrow, **kw).select(
+            F.col("doc_id"), *[F.col(o).alias(prefix + p) for o, p in outs]
+        )
+        _fm_join_back(cc, flow, key, scored)
+        _fm_register_extra(flow, [prefix + p for _, p in outs], prefix, public)
+        return v
+
+    return FlowMethod(sig, lo, hi, bind, (_TEXT,), batch)
+
+
+def _dropper(sig: str, kernel, needs=(_TEXT,)) -> FlowMethod:
+    """dedup_*([key]) — drop every document that near-duplicates a
+    smaller-keyed one: ``kernel`` returns the verified (a < b) pairs of
+    the narrow (doc_id, <needs>) projection and the pairwise
+    greater-key survivor rule removes each pair's ``b`` — deterministic
+    and SQL-replayable.  Candidates are bucketed, never all-pairs; the
+    anti join ships ids only and the corpus keeps its partitioning."""
+
+    def bind(cc, ctx, v, args, name):
+        key = _fm_survivor_key(cc, ctx, v, args, name)
+        narrow = _fm_narrow(v.flow, key, [c for cols, _ in needs for c in cols])
+        _fm_drop_losers(cc, v.flow, key, kernel(narrow))
+        return v
+
+    return FlowMethod(sig, 0, 1, bind, needs)
+
+
+def _fm_top_level(v: FlowV, method: str) -> None:
+    if v.corr_outer:
+        raise CompileError(
+            f"{method}() is not defined on a correlated sub-flow —"
+            " apply it to a top-level flow"
+        )
+
+
+def _fm_reshape(cc: Compiler, v: FlowV, method: str, res, names: list[str]) -> FlowV:
+    """Replace the flow with the derived relation ``res`` — the
+    RESHAPING flow methods yield a different row grain than their
+    input.  The result is a projection-style scope: ``names`` become
+    the flow's attributes, resolved through the kernel exactly like
+    ``^``-quotient output, so selection / sieve / sort / limit all
+    compose after the reshape (``/events.retention()?week_offset>0``)."""
+    _fm_top_level(v, method)
+    prefix = cc.engine.fresh("__" + method[:3]) + "_"
+    cols = {n: prefix + n for n in names}
+    nf = Flow(
+        cc.engine,
+        res.select(*[F.col(n).alias(cols[n]) for n in names]),
+        "",
+        None,
+    )
+    nf.kernel = [(n, cols[n]) for n in names]
+    # ordered-parity: like a quotient, the reshaped relation's implicit
+    # order is its kernel (materialized only under engine.ordered or an
+    # explicit sort — compile.finalize)
+    nf.order = [(c, True) for _, c in nf.kernel]
+    v.flow = nf
+    v.corr_inner = []
+    v.singular = False
+    v.value = None
     return v
 
 
-def _fm_dedup_minhash(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """dedup_minhash([key]) — drop every document that near-duplicates
-    a smaller-keyed one: minhash-LSH candidates verified by true
-    shingle Jaccard ≥ 0.5 (operators.dedup.minhash_dedup_pairs, the
-    same 8×4 band scheme + threshold as the op_dedup_minhash registry
-    row), then a LEFT ANTI join removes each verified pair's greater
-    key.  The survivor rule is pairwise (b of any (a<b) pair dies) —
-    deterministic and SQL-replayable, the language tier of the LSH
-    dedup stage.  At 100 TB: candidates are band-bucketed (never
-    all-pairs), the anti join ships ids only, and the corpus side
-    keeps its partitioning."""
-    if len(args) > 1:
-        raise CompileError("dedup_minhash([key]) takes at most one argument")
-    from .operators.dedup import minhash_dedup_pairs
+def _events(sig, lo, hi, cols, names, lower, takes=None) -> FlowMethod:
+    """Reshape an events flow: ``lower(narrow, args, name)`` runs the
+    kernel on the narrow ``cols`` projection (named like the events
+    table) and ``names`` become the attributes."""
 
+    def bind(cc, ctx, v, args, name):
+        narrow = v.flow.df.select(*[F.col(v.flow.scope_col(c)).alias(c) for c in cols])
+        return _fm_reshape(cc, v, name, lower(narrow, args, name), names)
+
+    return FlowMethod(sig, lo, hi, bind, _events_need(*cols), takes=takes)
+
+
+def _fm_value_list(cc: Compiler, ctx: Ctx, scope: ScopeRef, node, method: str):
+    """A ``{expr, name := expr, ...}`` selection argument of a sketch
+    reshape (the multi-expression form, like the agg family's mapped
+    selections): returns ``[(name, Column)]``.  Bare items must be
+    attribute names (the name IS the output label); computed
+    expressions need an alias."""
+    out: list[tuple[str, Column]] = []
+    for item in node.items:
+        if isinstance(item, N.Identifier):
+            out.append((item.name, cc.scalar(ctx, scope, item).col))
+        elif isinstance(item, N.Assignment):
+            out.append((item.name, cc.scalar(ctx, scope, item.expr).col))
+        else:
+            raise CompileError(
+                f"{method}() selection items must be attribute names"
+                " or aliased expressions (name := expr)"
+            )
+    if len({n for n, _ in out}) != len(out):
+        raise CompileError(f"{method}() names a value expression twice")
+    if not out:
+        raise CompileError(f"{method}() selection list is empty")
+    return out
+
+
+def _sketch(sig, lo, hi, takes, one, outs, lead=None, batch=False) -> FlowMethod:
+    """A sketch reshape ``name(expr|{a, b := expr}[, <lead>...][, group...])``.
+    ``lead(args, name)`` parses the literals after the value argument
+    and returns ``(params, index of the first group)``; ``outs(params)``
+    names the kernel's output attributes and ``one(df, expr, groups,
+    params, multi)`` builds one sketch relation of columns groups +
+    outs.  The multi-expression form runs one sketch per listed
+    expression (each keeps its own accuracy and certificate) and
+    unions them under a leading ``attr`` label.  Group arguments are
+    attribute names: they become output attributes, so a name that
+    collides with an output is rejected at compile time, before
+    resolution, instead of as an ambiguous column at execution."""
+
+    def bind(cc, ctx, v, args, name):
+        _fm_top_level(v, name)  # before any (possibly eager) sketch job
+        params, first_group = lead(args, name) if lead else (None, 1)
+        flow = v.flow
+        scope = _scope(flow)
+        if isinstance(args[0], N.Selection):
+            exprs = _fm_value_list(cc, ctx, scope, args[0], name)
+        else:
+            exprs = [(None, cc.scalar(ctx, scope, args[0]).col)]
+        multi = len(exprs) > 1 or exprs[0][0] is not None
+        names = ["attr"] * multi + outs(params)
+        shown = " / ".join(names)
+        if multi and any(n in names for n, _ in exprs):
+            raise CompileError(
+                f"{name}() value-expression name collides with an output"
+                f" attribute ({shown}) — alias it"
+            )
+        groups: list[tuple[str, Column]] = []
+        for a in args[first_group:]:
+            if not isinstance(a, N.Identifier):
+                raise CompileError(
+                    f"{name}() group arguments must be attribute names, listed last"
+                )
+            if a.name in names:
+                raise CompileError(
+                    f"{name}() group name {a.name!r} collides with an output"
+                    f" attribute ({shown})"
+                )
+            groups.append((a.name, cc.scalar(ctx, scope, a).col))
+        gnames = [g for g, _ in groups]
+        if len(set(gnames)) != len(gnames):
+            raise CompileError(f"{name}() names a group twice")
+        # a single sketch streams as-is when its kernel is lazy (its
+        # mergeable states ARE a streaming aggregate), but the multi form
+        # unions one streaming aggregate per expression — Spark allows at
+        # most one per query, so it is never streaming-legal
+        if multi and not batch and flow.df.isStreaming:
+            raise CompileError(
+                f"multi-expression {name}() is batch-only — it unions one"
+                " streaming aggregate per expression; drain the stream"
+                " first (run_stream) or sketch one expression per query"
+            )
+        if not multi:
+            res = one(flow.df, exprs[0][1], groups, params, False)
+            return _fm_reshape(cc, v, name, res, gnames + names)
+        parts = [
+            one(flow.df, expr, groups, params, True).select(
+                *gnames, F.lit(label).alias("attr"), *names[1:]
+            )
+            for label, expr in exprs
+        ]
+        res = functools.reduce(DataFrame.unionByName, parts)
+        return _fm_reshape(cc, v, name, res, gnames + names)
+
+    return FlowMethod(sig, lo, hi, bind, (), batch, takes)
+
+
+def _hll_one(df, expr, groups, _params, _multi):
+    narrow = df.select(expr.alias("__dc"), *[c.alias(g) for g, c in groups])
+    return _op("operators.sketches.hll_distinct")(
+        narrow, [g for g, _ in groups], "__dc", lgk=14
+    )
+
+
+def _kll_lead(args, name):
+    """quantiles' fraction literals: the run of numeric literals after
+    the value argument (any later argument is a group name)."""
+    i, qs = 1, []
+    while i < len(args) and _is_number(args[i]):
+        qs.append(_fm_frac_lit(args, i, name))
+        i += 1
+    if not qs:
+        raise CompileError(
+            "quantiles(expr, q1[, q2...][, group...]) takes a value"
+            " expression and at least one quantile literal"
+        )
+    if not all(0 < q <= 1 for q in qs):
+        raise CompileError("quantiles() fractions must be in (0, 1]")
+    return qs, i
+
+
+def _kll_outs(qs):
+    # the kernel's own naming formula — the collision check must
+    # reserve exactly the names the kernel will emit
+    from .operators.sketches import kll_quantile_name
+
+    return ["n", "err"] + [kll_quantile_name(q) for q in qs]
+
+
+def _kll_one(df, expr, groups, qs, _multi):
+    from .operators import sketches as S
+
+    by = [g for g, _ in groups] or None
+    narrow = df.select(expr.cast("double").alias("__qv"), *[c.alias(g) for g, c in groups])
+    try:
+        return S.kll_quantiles(
+            S.kll_merge(S.kll_sketch_states(narrow, "__qv", by=by, k=256), by=by), qs
+        )
+    except ValueError as exc:  # e.g. duplicate quantiles
+        raise CompileError(f"quantiles(): {exc}") from None
+
+
+def _mg_lead(args, name):
+    min_freq = _fm_frac_lit(args, 1, name) if len(args) == 2 else 0.01
+    if not 0 < min_freq <= 1:
+        raise CompileError(f"{name}() needs min_freq in (0, 1]")
+    return min_freq, 2
+
+
+def _mg_one(df, expr, _groups, min_freq, multi):
+    # the multi form casts items to text so the per-expression results
+    # union into one flow
+    narrow = df.select((expr.cast("string") if multi else expr).alias("item"))
+    return _op("operators.sketches.heavy_hitters")(narrow, "item", min_freq=min_freq)
+
+
+def _cms_piece(p: Column) -> Column:
+    # composite probe key: groups fold into the hashed value so one
+    # matrix serves every group.  The encoding must be INJECTIVE for
+    # arbitrary strings (a separator-joined concat lets a value
+    # CONTAINING the separator alias a different combination,
+    # collapsing two distinct (group..., item) rows into one merged
+    # estimate) — so each part is length-prefixed ('S<len>:<text>',
+    # NULL → 'N'): the digit run ends at the first ':' and the length
+    # then delimits the text, so decoding is unambiguous for any value,
+    # separators and sentinels included.
+    return F.when(p.isNull(), F.lit("N")).otherwise(
+        F.concat(F.lit("S"), F.length(p).cast("string"), F.lit(":"), p)
+    )
+
+
+def _cms_one(df, expr, groups, _params, _multi):
+    from .operators import sketches as S
+
+    eps, delta = 0.01, 1e-4
+    parts = [c.cast("string") for _, c in groups] + [expr.cast("string")]
+    # group attributes keep their ORIGINAL type in the output (only the
+    # probe key needs the string fold — a text-cast group column breaks
+    # downstream numeric sieves)
+    narrow = df.select(
+        F.concat(*[_cms_piece(p) for p in parts]).alias("__ck"),
+        *[c.alias(g) for g, c in groups],
+        expr.cast("string").alias("item"),
+    )
+    matrix, _depth, _width = S.cms_build(narrow, "__ck", eps=eps, delta=delta)
+    n_total = int(sum(matrix[0]))  # row sums of the matrix ARE n
+    est = S.cms_estimate(narrow.dropDuplicates(["__ck"]), "__ck", matrix, flag="est_n")
+    return est.select(
+        *[g for g, _ in groups], "item", "est_n",
+        F.lit(n_total).alias("n"), F.lit(int(math.ceil(eps * n_total))).alias("err"),
+    )
+
+
+def _fm_dedup_exact(cc: Compiler, ctx: Ctx, v: FlowV, args, name: str):
+    """dedup_exact([key]) — keep only the first (min key) document of
+    every exact-content fingerprint group: the language form of the
+    curation pipeline's exact-dedup stage.  The survivor key defaults
+    to the table's single-column primary key; pass an expression for
+    keyless mounts (``tweak.filedb``-style reflected catalogs have no
+    pk metadata).  ONE shuffle on the fingerprint (a min-over-Window,
+    no join); at 100 TB only the narrow (fp, key) pair drives the
+    exchange while every other column rides along the same
+    partitioning."""
     flow = v.flow
-    tcol = _fm_text_col(v, "dedup_minhash")
-    key = _fm_survivor_key(cc, ctx, v, args, "dedup_minhash")
-    narrow = flow.df.select(key.alias("doc_id"), F.col(tcol).alias("text"))
-    # reusable_cache=False: a long-lived language service compiles
-    # many distinct dedup queries — unowned cache() entries per plan
-    # would grow executor storage without bound (r9 self-review)
-    _fm_drop_losers(
-        cc,
-        flow,
-        key,
-        minhash_dedup_pairs(narrow, threshold=0.5, reusable_cache=False),
+    key = _fm_survivor_key(cc, ctx, v, args, name)
+    fpc = cc.engine.fresh("__fp")
+    keyc = cc.engine.fresh("__dk")
+    mnc = cc.engine.fresh("__mn")
+    w = Window.partitionBy(F.col(fpc))
+    fingerprint = _op("operators.textstats.fingerprint")
+    flow.df = (
+        flow.df.withColumn(fpc, fingerprint(F.col(flow.scope_col("text"))))
+        .withColumn(keyc, key)
+        .withColumn(mnc, F.min(F.col(keyc)).over(w))
+        .filter(F.col(keyc) == F.col(mnc))
+        .drop(fpc, keyc, mnc)
     )
     return v
 
 
-def _fm_tfidf(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """tfidf([k[, key]]) — expand the flow to its top-k tf·idf terms
-    per document (operators.pipeline.tfidf_top_terms as a flow
-    method): each row becomes ≤k rows carrying every original column
-    plus the appended ``tfidf_term`` / ``tfidf_tf`` / ``tfidf_score``
-    attributes (documents with no terms drop out — plural expansion
-    semantics, like an empty plural link).  One explode + two
-    map-side-combined aggregations + a shuffle join back on the key;
-    the term table is never broadcast by force (web-scale vocabularies
-    are themselves huge — AQE still picks broadcast when small)."""
-    if len(args) > 2:
-        raise CompileError("tfidf([k[, key]]) takes at most two arguments")
-    from .operators.pipeline import tfidf_top_terms
-
-    flow = v.flow
-    tcol = _fm_text_col(v, "tfidf")
-    k = _fm_int_lit(args, 0, 3, "tfidf")
-    if k < 1:
-        raise CompileError("tfidf() needs k >= 1")
-    key = _fm_survivor_key(cc, ctx, v, args[1:], "tfidf", example="tfidf(3, doc_id)")
-    narrow = flow.df.select(key.alias("__id"), F.col(tcol).alias("__text"))
-    prefix = cc.engine.fresh("__tfidf") + "_"
-    top = tfidf_top_terms(narrow, k=k, text_col="__text", id_col="__id").select(
-        F.col("__id"),
-        F.col("term").alias(f"{prefix}term"),
-        F.col("tf").alias(f"{prefix}tf"),
-        F.col("tfidf").alias(f"{prefix}score"),
-    )
-    _fm_join_back(cc, flow, key, top, join_key="__id")
-    for nm in ("term", "tf", "score"):
-        flow.extra[f"tfidf_{nm}"] = f"{prefix}{nm}"
-    return v
-
-
-def _fm_near(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
+def _fm_near(cc: Compiler, ctx: Ctx, v: FlowV, args, name: str):
     """near(query_id[, k]) — restrict an embeddings-shaped flow to the
     k approximate nearest neighbours of the row keyed ``query_id``,
     appending the match score as ``near_cos4`` (IVF-PQ asymmetric
     distance: operators.similarity.topk_ivfpq, the same seeded
     coarse/fine quantizers as the op_ann_ivfpq registry row).
-    Similarity search becomes language surface:
     ``/embeddings.near(0, 10){vec_id, label, near_cos4}``.  The probe
     set is a literal IN (planning-time pruning); the join back ships
     k ids — at 100 TB the corpus-side cost is the nprobe-cell ADC
     scan, nothing else."""
-    if not args or len(args) > 2:
-        raise CompileError("near(query_id[, k]) takes 1 or 2 arguments")
-    from .operators.similarity import topk_ivfpq
-
     flow = v.flow
-    if flow.table is None or "embedding" not in flow.table.columns:
-        raise CompileError(
-            "near() requires a flow over a table with an 'embedding'"
-            " column (e.g. /embeddings)"
-        )
-    qid = _fm_int_lit(args, 0, 0, "near")
-    k = _fm_int_lit(args, 1, 10, "near")
-    if k < 1:
-        raise CompileError("near() needs k >= 1")
+    qid = _fm_int_lit(args, 0, 0, name)
+    k = _fm_int_lit(args, 1, 10, name, 1, "k")
     if not flow.table.pk or len(flow.table.pk) != 1:
         raise CompileError("near() needs a single-column primary key")
     key = F.col(flow.scope_col(flow.table.pk[0]))
@@ -1630,7 +1925,7 @@ def _fm_near(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
         label.alias("label"),
     )
     prefix = cc.engine.fresh("__near") + "_"
-    res = topk_ivfpq(narrow, query_id=qid, topk=k).select(
+    res = _op("operators.similarity.topk_ivfpq")(narrow, query_id=qid, topk=k).select(
         F.col("vec_id"), F.col("cos4").alias(f"{prefix}cos4")
     )
     _fm_join_back(cc, flow, key, F.broadcast(res), join_key="vec_id")
@@ -1638,62 +1933,7 @@ def _fm_near(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     return v
 
 
-def _fm_str_lit(args, i: int, method: str) -> str:
-    a = args[i]
-    if not (isinstance(a, N.Literal) and isinstance(a.value, str)):
-        raise CompileError(f"{method}() argument {i + 1} must be a text literal")
-    return a.value
-
-
-def _fm_frac_lit(args, i: int, method: str) -> float:
-    import decimal
-
-    a = args[i]
-    if isinstance(a, N.Literal) and isinstance(a.value, (int, float, decimal.Decimal)):
-        return float(a.value)
-    raise CompileError(f"{method}() argument {i + 1} must be a numeric literal")
-
-
-def _fm_stats(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """stats() — append the corpus-profile stat set as navigable
-    attributes ``stats_tokens`` / ``stats_words`` / ``stats_chars`` /
-    ``stats_punct_ratio`` / ``stats_quality`` / ``stats_langid`` /
-    ``stats_fp`` (operators.textstats.append_text_stats as a flow
-    method): ``/documents.stats(){doc_id,
-    stats_quality}?stats_langid='en'``.  Pure in-row expressions,
-    zero shuffle — a 100 TB corpus profiles at scan speed."""
-    if args:
-        raise CompileError("stats() takes no arguments")
-    from .operators.textstats import append_text_stats
-
-    flow = v.flow
-    tcol = _fm_text_col(v, "stats")
-    prefix = cc.engine.fresh("__st") + "_"
-    flow.df, names = append_text_stats(flow.df, text_col=tcol, prefix=prefix)
-    _fm_register_extra(flow, names, prefix, "stats_")
-    return v
-
-
-def _fm_pii(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """pii() — append the PII-redaction signals ``pii_emails`` /
-    ``pii_phones`` (match counts) and ``pii_clean`` (the redacted
-    text, emails/phones replaced by typed placeholders):
-    operators.pipeline.append_pii_signals as a flow method,
-    ``/documents.pii(){doc_id, pii_clean}?pii_emails>0``.  Pure
-    regexp expressions, codegen'd, zero shuffle."""
-    if args:
-        raise CompileError("pii() takes no arguments")
-    from .operators.pipeline import append_pii_signals
-
-    flow = v.flow
-    tcol = _fm_text_col(v, "pii")
-    prefix = cc.engine.fresh("__pii") + "_"
-    flow.df, names = append_pii_signals(flow.df, text_col=tcol, prefix=prefix)
-    _fm_register_extra(flow, names, prefix, "pii_")
-    return v
-
-
-def _fm_sample(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
+def _fm_sample(cc: Compiler, ctx: Ctx, v: FlowV, args, name: str):
     """sample(frac[, key]) — deterministic content-stable sampling:
     keep the rows whose salted md5 key prefix falls below the
     fraction threshold (operators.pipeline's hash-split kernel, salt
@@ -1702,22 +1942,17 @@ def _fm_sample(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     partition layouts all select the SAME rows — the property a
     training-data pipeline needs for reproducible subsets.  Narrow,
     zero shuffle, no action."""
-    if not args or len(args) > 2:
-        raise CompileError("sample(frac[, key]) takes 1 or 2 arguments")
     from .operators.pipeline import _hash_prefix, frac_hex
 
-    frac = _fm_frac_lit(args, 0, "sample")
+    frac = _fm_frac_lit(args, 0, name)
     if not 0.0 <= frac <= 1.0:
         raise CompileError("sample() needs a fraction between 0 and 1")
-    flow = v.flow
-    key = _fm_survivor_key(
-        cc, ctx, v, args[1:], "sample", example="sample(0.25, doc_id)"
-    )
-    flow.df = flow.df.filter(_hash_prefix(key, "sample") < F.lit(frac_hex(frac)))
+    key = _fm_survivor_key(cc, ctx, v, args[1:], name, example="sample(0.25, doc_id)")
+    v.flow.df = v.flow.df.filter(_hash_prefix(key, "sample") < F.lit(frac_hex(frac)))
     return v
 
 
-def _fm_split(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
+def _fm_split(cc: Compiler, ctx: Ctx, v: FlowV, args, name: str):
     """split([name[, key]]) — the train/valid/test assignment
     (operators.pipeline.split_expr, the hash_split 90/5/5 kernel) as
     language surface.  ``split()`` appends the assignment as the
@@ -1727,38 +1962,33 @@ def _fm_split(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     re-ingestion — and the sieve form composes with everything
     downstream (``/documents.split('test').dedup_exact(){doc_id}``).
     Narrow, zero shuffle."""
-    if len(args) > 2:
-        raise CompileError("split([name[, key]]) takes at most two arguments")
-    from .operators.pipeline import split_expr
-
+    split_expr = _op("operators.pipeline.split_expr")
     flow = v.flow
     # append form: split() on a pk'd flow, or split(key_expr) on a
-    # pk-less mount (a non-text-literal first argument is the key)
-    if not args or not (
-        isinstance(args[0], N.Literal) and isinstance(args[0].value, str)
-    ):
+    # pk-less mount (a non-text-literal first argument is the key).
+    # Its own arity check: which form applies depends on the first
+    # argument, which the table's argument range cannot see.
+    if not args or not (isinstance(args[0], N.Literal) and isinstance(args[0].value, str)):
         if len(args) > 1:
             raise CompileError("split(key) takes at most one argument")
-        key = _fm_survivor_key(
-            cc, ctx, v, args, "split", example="split(doc_id)"
-        )
+        key = _fm_survivor_key(cc, ctx, v, args, name, example="split(doc_id)")
         col = cc.engine.fresh("__spl")
         flow.df = flow.df.withColumn(col, split_expr(key))
         flow.extra["split"] = col
         return v
-    name = _fm_str_lit(args, 0, "split")
+    split = _fm_str_lit(args, 0, name)
     names = ("train", "valid", "test")
-    if name not in names:
+    if split not in names:
         raise CompileError(
-            f"split() has no split named {name!r} (expected one of"
+            f"split() has no split named {split!r} (expected one of"
             f" {', '.join(names)})"
         )
-    key = _fm_survivor_key(cc, ctx, v, args[1:], "split")
-    flow.df = flow.df.filter(split_expr(key) == F.lit(name))
+    key = _fm_survivor_key(cc, ctx, v, args[1:], name)
+    flow.df = flow.df.filter(split_expr(key) == F.lit(split))
     return v
 
 
-def _fm_sessionize(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
+def _fm_sessionize(cc: Compiler, ctx: Ctx, v: FlowV, args, name: str):
     """sessionize([gap_minutes]) — append the per-event 0-based
     session index as the ``session_id`` attribute (operators.
     analytics.append_session_index, the gaps-and-islands kernel the
@@ -1767,22 +1997,10 @@ def _fm_sessionize(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     (default 30).  ``/events.sessionize(){user_id, session_id,
     event_id}`` — one shuffle on user_id; both windows share the
     partitioning."""
-    if len(args) > 1:
-        raise CompileError("sessionize([gap_minutes]) takes at most one argument")
-    from .operators.analytics import append_session_index
-
     flow = v.flow
-    need = ("ts", "user_id", "event_id")
-    if flow.table is None or any(c not in flow.table.columns for c in need):
-        raise CompileError(
-            "sessionize() requires a flow over a table with 'ts',"
-            " 'user_id' and 'event_id' columns (e.g. /events)"
-        )
-    gap = _fm_int_lit(args, 0, 30, "sessionize")
-    if gap < 1:
-        raise CompileError("sessionize() needs gap_minutes >= 1")
+    gap = _fm_int_lit(args, 0, 30, name, 1, "gap_minutes")
     prefix = cc.engine.fresh("__ses") + "_"
-    flow.df, names = append_session_index(
+    flow.df, names = _op("operators.analytics.append_session_index")(
         flow.df,
         gap_minutes=gap,
         ts_col=flow.scope_col("ts"),
@@ -1794,33 +2012,7 @@ def _fm_sessionize(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     return v
 
 
-def _fm_winnow(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """winnow([key]) — expand the flow to its winnowing fingerprints
-    (Schleimer '03, the MOSS substring-matching sketch): each row
-    becomes one row per distinct window-min gram hash, carrying every
-    original column plus the appended ``fp`` attribute
-    (operators.textstats.winnow_fingerprints with the portable md5
-    gram hash — the op_winnow_portable kernel).  Plural expansion
-    semantics like tfidf().  Fingerprints are produced task-locally
-    at scan speed; the join back ships (key, fp) only."""
-    if len(args) > 1:
-        raise CompileError("winnow([key]) takes at most one argument")
-    from .operators.textstats import winnow_fingerprints
-
-    flow = v.flow
-    tcol = _fm_text_col(v, "winnow")
-    key = _fm_survivor_key(cc, ctx, v, args, "winnow")
-    narrow = flow.df.select(key.alias("doc_id"), F.col(tcol).alias("text"))
-    prefix = cc.engine.fresh("__wn") + "_"
-    fps = winnow_fingerprints(narrow, gram_hash="md5").select(
-        F.col("doc_id"), F.col("fp").alias(f"{prefix}fp")
-    )
-    _fm_join_back(cc, flow, key, fps)
-    flow.extra["fp"] = f"{prefix}fp"
-    return v
-
-
-def _fm_chunk(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
+def _fm_chunk(cc: Compiler, ctx: Ctx, v: FlowV, args, name: str):
     """chunk([n_tokens[, overlap]]) — expand the flow into sliding
     token windows (operators.pipeline.append_chunk_columns, the
     chunk_documents kernel): each row becomes one row per window,
@@ -1829,325 +2021,71 @@ def _fm_chunk(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     Defaults 32-token chunks advancing by 24 (overlap 8).  Pure
     generate-and-slice, no shuffle, no join — a 100 TB corpus chunks
     at scan speed."""
-    if len(args) > 2:
-        raise CompileError(
-            "chunk([n_tokens[, overlap]]) takes at most two arguments"
-        )
-    from .operators.pipeline import append_chunk_columns
-
     flow = v.flow
-    tcol = _fm_text_col(v, "chunk")
-    n = _fm_int_lit(args, 0, 32, "chunk")
-    overlap = _fm_int_lit(args, 1, 8, "chunk")
+    n = _fm_int_lit(args, 0, 32, name)
+    overlap = _fm_int_lit(args, 1, 8, name)
     if n < 1 or overlap < 0 or overlap >= n:
         raise CompileError("chunk() needs n_tokens >= 1 and 0 <= overlap < n_tokens")
     prefix = cc.engine.fresh("__ck") + "_"
-    flow.df, names = append_chunk_columns(
-        flow.df, chunk_tokens=n, overlap=overlap, text_col=tcol, prefix=prefix
+    flow.df, names = _op("operators.pipeline.append_chunk_columns")(
+        flow.df, chunk_tokens=n, overlap=overlap, text_col=flow.scope_col("text"),
+        prefix=prefix,
     )
     _fm_register_extra(flow, names, prefix, "chunk_")
     return v
 
 
-def _fm_repetition(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """repetition() — append the Gopher-family repetition quality
-    signals ``rep_n_words`` / ``rep_dup_word_frac`` /
-    ``rep_top_word_frac`` / ``rep_top_bigram_frac``
-    (operators.textstats.append_repetition_signals as a flow method).
-    Zero shuffle, task-local array algebra."""
-    if args:
-        raise CompileError("repetition() takes no arguments")
-    from .operators.textstats import append_repetition_signals
-
-    flow = v.flow
-    tcol = _fm_text_col(v, "repetition")
-    prefix = cc.engine.fresh("__rep") + "_"
-    flow.df, names = append_repetition_signals(flow.df, text_col=tcol, prefix=prefix)
-    _fm_register_extra(flow, names, prefix, "rep_")
-    return v
-
-
-def _fm_unigram(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """unigram([key]) — append the unigram language-model score (the
-    perplexity-filter proxy, operators.pipeline.unigram_logprob) as
-    the ``lm_n_words`` / ``lm_avg_logp`` / ``lm_ppl`` attributes:
-    each document scored by the mean log-probability of its words
-    under the corpus's OWN unigram distribution.  Two term-keyed
-    shuffles (count + probe) and a join back shipping (key, 3
-    numbers); the vocabulary is never broadcast — unbounded at
-    100 TB."""
-    if len(args) > 1:
-        raise CompileError("unigram([key]) takes at most one argument")
-    from .operators.pipeline import unigram_logprob
-
-    flow = v.flow
-    tcol = _fm_text_col(v, "unigram")
-    key = _fm_survivor_key(cc, ctx, v, args, "unigram")
-    narrow = flow.df.select(key.alias("doc_id"), F.col(tcol).alias("text"))
-    prefix = cc.engine.fresh("__lm") + "_"
-    scored = unigram_logprob(narrow).select(
-        F.col("doc_id"),
-        F.col("n_words").alias(f"{prefix}n_words"),
-        F.col("avg_logp").alias(f"{prefix}avg_logp"),
-        F.col("ppl").alias(f"{prefix}ppl"),
-    )
-    _fm_join_back(cc, flow, key, scored)
-    for nm in ("n_words", "avg_logp", "ppl"):
-        flow.extra[f"lm_{nm}"] = f"{prefix}{nm}"
-    return v
-
-
-def _fm_dsir(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """dsir(target[, key]) — append the DSIR importance weight
-    (Xie '23, operators.pipeline.dsir_weights) as ``dsir_n_grams`` /
-    ``dsir_logw``: every document scored by how much its hashed
-    unigram+bigram profile looks like the TARGET sub-corpus, where
-    the target is any boolean expression over the flow
-    (``/documents.dsir(lang='en')``).  Domain-targeted resampling
-    becomes language surface.  One (doc, bucket) shuffle; the
-    1024-row log-ratio table broadcasts; the join back ships
-    (key, 2 numbers)."""
-    if not args or len(args) > 2:
-        raise CompileError("dsir(target[, key]) takes 1 or 2 arguments")
-    from .operators.pipeline import dsir_weights
-
-    flow = v.flow
-    tcol = _fm_text_col(v, "dsir")
-    scope = ScopeRef(flow, flow.alias, flow.table)
-    pred = fnlib.to_boolean(cc, scope, cc.scalar(ctx, scope, args[0]).col)
-    key = _fm_survivor_key(
-        cc, ctx, v, args[1:], "dsir", example="dsir(target, doc_id)"
-    )
-    narrow = flow.df.select(
-        key.alias("doc_id"), F.col(tcol).alias("text"), pred.alias("__tgt")
-    )
-    prefix = cc.engine.fresh("__dsir") + "_"
-    scored = dsir_weights(narrow, target=F.col("__tgt")).select(
-        F.col("doc_id"),
-        F.col("n_grams").alias(f"{prefix}n_grams"),
-        F.col("logw").alias(f"{prefix}logw"),
-    )
-    _fm_join_back(cc, flow, key, scored)
-    for nm in ("n_grams", "logw"):
-        flow.extra[f"dsir_{nm}"] = f"{prefix}{nm}"
-    return v
-
-
-def _fm_dedup_ngram(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """dedup_ngram([key]) — drop every document whose character-3-gram
-    Jaccard with a smaller-keyed one is ≥ 0.5
-    (operators.dedup.ngram_jaccard_pairs with the production
-    hot-bucket cap, the op_dedup_ngram kernel): the bucketed n-gram
-    dedup tier as language surface.  Requires a ``lang`` column —
-    the (lang, length-band) bucketing is the scale story (worst case
-    #buckets·cap², never all-pairs).  The pairwise greater-key
-    survivor rule matches dedup_minhash()."""
-    if len(args) > 1:
-        raise CompileError("dedup_ngram([key]) takes at most one argument")
-    from .operators.dedup import ngram_jaccard_pairs
-
-    flow = v.flow
-    tcol = _fm_text_col(v, "dedup_ngram")
-    if "lang" not in flow.table.columns:
-        raise CompileError(
-            "dedup_ngram() requires a flow over a table with a 'lang'"
-            " column (the bucketing key)"
-        )
-    key = _fm_survivor_key(cc, ctx, v, args, "dedup_ngram")
-    narrow = flow.df.select(
-        key.alias("doc_id"),
-        F.col(tcol).alias("text"),
-        F.col(flow.scope_col("lang")).alias("lang"),
-    )
-    _fm_drop_losers(
-        cc, flow, key, ngram_jaccard_pairs(narrow, n=3, threshold=0.5, max_bucket=200)
-    )
-    return v
-
-
-def _fm_dedup_simhash(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """dedup_simhash([key]) — drop every document within simhash
-    hamming distance ≤ 3 of a smaller-keyed one
-    (operators.dedup.simhash_near_pairs with the PORTABLE md5 token
-    hash — the op_simhash_pairs_portable kernel, so the language tier
-    is oracle-replayable).  Banding (4×16-bit chunks) guarantees
-    recall at hamming ≤ 3; candidates are chunk-bucketed, never
-    all-pairs.  Same survivor rule as dedup_minhash()."""
-    if len(args) > 1:
-        raise CompileError("dedup_simhash([key]) takes at most one argument")
-    from .operators.dedup import simhash_near_pairs
-
-    flow = v.flow
-    tcol = _fm_text_col(v, "dedup_simhash")
-    key = _fm_survivor_key(cc, ctx, v, args, "dedup_simhash")
-    narrow = flow.df.select(key.alias("doc_id"), F.col(tcol).alias("text"))
-    _fm_drop_losers(
-        cc, flow, key, simhash_near_pairs(narrow, max_hamming=3, token_hash="md5")
-    )
-    return v
-
-
-def _fm_budget(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """budget(n_tokens[, key]) — restrict the flow to the
-    highest-quality documents, greedily in (quality-bucket desc,
-    md5(key), key) order, until ``n_tokens`` whitespace tokens are
-    selected (operators.pipeline.select_token_budget — histogram walk
-    + boundary-bucket-only window, NO global sort): the
-    'train on the best N tokens' selection step as language surface,
-    appending ``budget_q`` / ``budget_toks``.  NOTE: the histogram
-    walk runs a small aggregation job at compile time (driver gets ≤
-    1000 rows), like the operator itself."""
-    if not args or len(args) > 2:
-        raise CompileError("budget(n_tokens[, key]) takes 1 or 2 arguments")
-    _fm_require_batch(v, "budget")
-    from .operators.pipeline import select_token_budget
-
-    n = _fm_int_lit(args, 0, 0, "budget")
-    flow = v.flow
-    tcol = _fm_text_col(v, "budget")
-    key = _fm_survivor_key(
-        cc, ctx, v, args[1:], "budget", example="budget(100000, doc_id)"
-    )
-    narrow = flow.df.select(key.alias("doc_id"), F.col(tcol).alias("text"))
-    prefix = cc.engine.fresh("__bud") + "_"
-    sel = select_token_budget(narrow, budget_tokens=n).select(
-        F.col("doc_id"),
-        F.col("q").alias(f"{prefix}q"),
-        F.col("toks").alias(f"{prefix}toks"),
-    )
-    _fm_join_back(cc, flow, key, sel)
-    for nm in ("q", "toks"):
-        flow.extra[f"budget_{nm}"] = f"{prefix}{nm}"
-    return v
-
-
-def _fm_zscore(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
+def _fm_zscore(cc: Compiler, ctx: Ctx, v: FlowV, args, name: str):
     """zscore(value, group[, group...]) — append the group-wise
     z-score of any expression as the ``z`` attribute (operators.olap.
     append_zscore, the op_zscore kernel): z = (x − μ_g) / σ_g with
     the group's sample stddev; σ_g = 0 or a single-row group yields
     NULL.  Value and groups are full expressions over the flow
-    (``/events.zscore(value, event_type)``,
-    ``/orders.zscore(o_totalprice, o_orderpriority)``).  ONE shuffle
-    on the group key — both moments and the normalized value share a
-    single Window partitioning.  A group key is REQUIRED: the global
-    (ungrouped) z-score would be a single-partition window — compute
-    global moments with avg()/stddev() aggregates instead."""
-    if len(args) < 2:
-        raise CompileError(
-            "zscore(value, group[, group...]) takes a value expression"
-            " and at least one group expression"
-        )
-    from .operators.olap import append_zscore
-
+    (``/events.zscore(value, event_type)``).  ONE shuffle on the group
+    key — both moments and the normalized value share a single Window
+    partitioning.  A group key is REQUIRED: the global (ungrouped)
+    z-score would be a single-partition window — compute global
+    moments with avg()/stddev() aggregates instead."""
     flow = v.flow
-    scope = ScopeRef(flow, flow.alias, flow.table)
+    scope = _scope(flow)
     value = cc.scalar(ctx, scope, args[0]).col
     groups = [cc.scalar(ctx, scope, a).col for a in args[1:]]
     prefix = cc.engine.fresh("__zs") + "_"
-    flow.df, names = append_zscore(flow.df, value, groups, prefix=prefix)
+    flow.df, names = _op("operators.olap.append_zscore")(
+        flow.df, value, groups, prefix=prefix
+    )
     flow.extra["z"] = names[0]
     return v
 
 
-def _fm_dup_spans(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """dup_spans([key]) — append the substring-level duplicated-span
-    stats (Lee '21; operators.textstats.duplicated_spans, the
-    op_dup_spans kernel) as ``spans_n_windows`` / ``spans_dup_windows``
-    / ``spans_n_spans`` / ``spans_dup_chars`` / ``spans_dup_frac``:
-    corpus-wide verbatim 40-char windows at 8-char stride, merged to
-    maximal spans.  One fp shuffle + one doc shuffle; the join back
-    ships ids + five numbers, never text."""
-    if len(args) > 1:
-        raise CompileError("dup_spans([key]) takes at most one argument")
-    from .operators.textstats import duplicated_spans
-
-    flow = v.flow
-    tcol = _fm_text_col(v, "dup_spans")
-    key = _fm_survivor_key(cc, ctx, v, args, "dup_spans")
-    narrow = flow.df.select(key.alias("doc_id"), F.col(tcol).alias("text"))
-    prefix = cc.engine.fresh("__sp") + "_"
-    stats = duplicated_spans(narrow)
-    names = ["n_windows", "dup_windows", "n_spans", "dup_chars", "dup_frac"]
-    stats = stats.select(
-        F.col("doc_id"), *[F.col(n).alias(f"{prefix}{n}") for n in names]
-    )
-    _fm_join_back(cc, flow, key, stats)
-    _fm_register_extra(flow, [f"{prefix}{n}" for n in names], prefix, "spans_")
-    return v
-
-
-def _fm_pack(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """pack([budget[, key]]) — expand the flow into the concat-and-
-    chunk sequence-packing layout (operators.pipeline.pack_sequences,
-    the op_pack kernel): one row per (document × training sequence)
-    span, appending ``pack_shard`` / ``pack_seq_id`` / ``pack_offset``
-    / ``pack_take``.  Documents are bucketed into md5-derived shards,
-    each packed with one window cumsum — parallelism is the shard
-    count, no global order dependency; the join back ships ids + four
-    small ints."""
-    if len(args) > 2:
-        raise CompileError("pack([budget[, key]]) takes at most two arguments")
-    from .operators.pipeline import pack_sequences
-
-    budget = _fm_int_lit(args, 0, 64, "pack")
-    if budget < 1:
-        raise CompileError("pack() needs budget >= 1")
-    flow = v.flow
-    tcol = _fm_text_col(v, "pack")
-    key = _fm_survivor_key(
-        cc, ctx, v, args[1:], "pack", example="pack(64, doc_id)"
-    )
-    narrow = flow.df.select(key.alias("doc_id"), F.col(tcol).alias("text"))
-    prefix = cc.engine.fresh("__pk") + "_"
-    names = ["shard", "seq_id", "offset", "take"]
-    spans = pack_sequences(narrow, budget=budget).select(
-        F.col("doc_id"), *[F.col(n).alias(f"{prefix}{n}") for n in names]
-    )
-    _fm_join_back(cc, flow, key, spans)
-    _fm_register_extra(flow, [f"{prefix}{n}" for n in names], prefix, "pack_")
-    return v
-
-
-def _fm_mix(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
+def _fm_mix(cc: Compiler, ctx: Ctx, v: FlowV, args, name: str):
     """mix(label, name1, frac1[, name2, frac2, ...]) — restrict the
     flow to a deterministic MIXTURE: partition by the ``label``
     expression, downsample each named partition so the union
     approximates the target weights at the largest feasible total
     (operators.pipeline.mix_corpora, the op_mix kernel — no partition
-    is upsampled; the binding one keeps all rows).  The training-data
-    "mixture weights" op as language surface:
+    is upsampled; the binding one keeps all rows).
     ``/documents.mix(lang, 'en', 0.7, 'de', 0.3)``.  Selection is a
     pure md5 function of the key, so re-runs and re-partitions keep
-    the SAME mixture.  NOTE: fixing the rates runs one count per
-    partition at compile time (model-state aggregates, like
-    budget()); the selection itself is a narrow semi join on ids."""
-    if len(args) < 3 or len(args) % 2 == 0:
-        raise CompileError(
-            "mix(label, name1, frac1[, name2, frac2, ...]) takes a"
-            " label expression and (name, fraction) literal pairs"
-        )
-    _fm_require_batch(v, "mix")
-    from .operators.pipeline import mix_corpora
-
+    the SAME mixture.  Batch-only: fixing the rates runs one count per
+    partition at compile time (model-state aggregates, like budget());
+    the selection itself is a narrow semi join on ids."""
     flow = v.flow
-    scope = ScopeRef(flow, flow.alias, flow.table)
-    label = cc.scalar(ctx, scope, args[0]).col
+    label = cc.scalar(ctx, _scope(flow), args[0]).col
     fractions: dict[str, float] = {}
     for i in range(1, len(args), 2):
-        name = _fm_str_lit(args, i, "mix")
-        frac = _fm_frac_lit(args, i + 1, "mix")
+        part = _fm_str_lit(args, i, name)
+        frac = _fm_frac_lit(args, i + 1, name)
         if not 0 < frac <= 1:
             raise CompileError("mix() fractions must be in (0, 1]")
-        if name in fractions:
-            raise CompileError(f"mix() names a partition twice: '{name}'")
-        fractions[name] = frac
-    key = _fm_survivor_key(cc, ctx, v, [], "mix")
+        if part in fractions:
+            raise CompileError(f"mix() names a partition twice: '{part}'")
+        fractions[part] = frac
+    key = _fm_survivor_key(cc, ctx, v, [], name)
     narrow = flow.df.select(key.alias("doc_id"), label.alias("__lbl"))
-    sources = {
-        s: narrow.filter(F.col("__lbl") == s).select("doc_id") for s in fractions
-    }
+    sources = {s: narrow.filter(F.col("__lbl") == s).select("doc_id") for s in fractions}
     try:
+        mix_corpora = _op("operators.pipeline.mix_corpora")
         selected = mix_corpora(sources, fractions, "doc_id").select("doc_id")
     except ValueError as exc:
         # e.g. a named partition matching zero rows — surface as a
@@ -2162,7 +2100,7 @@ def _fm_mix(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     return v
 
 
-def _fm_cluster(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
+def _fm_cluster(cc: Compiler, ctx: Ctx, v: FlowV, args, name: str):
     """cluster([key]) — append the near-dup CLUSTER id as the
     ``cluster_id`` attribute: connected components over the bucketed
     character-3-gram Jaccard ≥ 0.5 pair graph (operators.dedup.
@@ -2170,36 +2108,23 @@ def _fm_cluster(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     deterministic, oracle-replayable tier — then operators.dedup.
     dedup_clusters' large-star/small-star contraction).  Every row
     gets an id: clustered documents share their component's minimum
-    key, singletons keep their own.  Completes the dedup language
-    story: dedup_*() keeps survivors, cluster() EXPOSES the groups
-    (``^{cid := cluster_id}{cid, n := count(^)}`` profiles them).
-    NOTE: the star contraction runs a bounded iterative job at
-    compile time (O(log² n) rounds over a shrinking edge set), like
-    budget()'s histogram walk; at 100 TB the pair graph is bucketed
-    (never all-pairs) and only (id, id) edges shuffle."""
-    if len(args) > 1:
-        raise CompileError("cluster([key]) takes at most one argument")
-    _fm_require_batch(v, "cluster")
+    key, singletons keep their own.  dedup_*() keeps survivors,
+    cluster() EXPOSES the groups (``^{cid := cluster_id}{cid, n :=
+    count(^)}`` profiles them).  Batch-only: the star contraction runs
+    a bounded iterative job at compile time (O(log² n) rounds over a
+    shrinking edge set), like budget()'s histogram walk; at 100 TB the
+    pair graph is bucketed (never all-pairs) and only (id, id) edges
+    shuffle."""
+    import pyspark.sql.types as T
+
     from .operators.dedup import dedup_clusters, ngram_jaccard_pairs
 
     flow = v.flow
-    tcol = _fm_text_col(v, "cluster")
-    if flow.table is None or "lang" not in flow.table.columns:
-        raise CompileError(
-            "cluster() requires a flow over a table with a 'lang'"
-            " column (the bucketing key)"
-        )
-    key = _fm_survivor_key(cc, ctx, v, args, "cluster")
-    narrow = flow.df.select(
-        key.alias("doc_id"),
-        F.col(tcol).alias("text"),
-        F.col(flow.scope_col("lang")).alias("lang"),
-    )
+    key = _fm_survivor_key(cc, ctx, v, args, name)
+    narrow = _fm_narrow(flow, key, ("text", "lang"))
     # dedup_clusters casts pair endpoints to long and DROPS nulls —
     # a string key would silently yield all-singleton ids, so reject
     # it loudly at bind time instead
-    import pyspark.sql.types as T
-
     ktype = narrow.schema["doc_id"].dataType
     if not isinstance(ktype, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
         raise CompileError(
@@ -2223,7 +2148,7 @@ def _fm_cluster(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     return v
 
 
-def _fm_profile(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
+def _fm_profile(cc: Compiler, ctx: Ctx, v: FlowV, args, name: str):
     """profile(value, partition, order, tiebreak[, n_tiles]) — append
     the full analytic-window family of ``value`` over one partitioned
     ordering (operators.analytics.append_window_profile, the
@@ -2235,21 +2160,12 @@ def _fm_profile(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     2.3.3 has no window functions, SURVEY §2 F11/F20 boundary); here
     it is language surface.  ONE shuffle on the partition key; both
     Window nodes share the partitioning."""
-    if len(args) < 4 or len(args) > 5:
-        raise CompileError(
-            "profile(value, partition, order, tiebreak[, n_tiles])"
-            " takes 4 or 5 arguments"
-        )
-    from .operators.analytics import append_window_profile
-
     flow = v.flow
-    scope = ScopeRef(flow, flow.alias, flow.table)
+    scope = _scope(flow)
     value, part, order, tie = (cc.scalar(ctx, scope, a).col for a in args[:4])
-    n_tiles = _fm_int_lit(args, 4, 4, "profile")
-    if n_tiles < 1:
-        raise CompileError("profile() needs n_tiles >= 1")
+    n_tiles = _fm_int_lit(args, 4, 4, name, 1, "n_tiles")
     prefix = cc.engine.fresh("__wp") + "_"
-    flow.df, names = append_window_profile(
+    flow.df, names = _op("operators.analytics.append_window_profile")(
         flow.df, value=value, partition=part, order=order, tiebreak=tie,
         n_tiles=n_tiles, prefix=prefix,
     )
@@ -2257,163 +2173,59 @@ def _fm_profile(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     return v
 
 
-def _fm_heavy_hitters(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """heavy_hitters(expr[, min_freq]) — reshape the flow into its
-    EXACT frequent items: every distinct value of ``expr`` with global
-    frequency ≥ ``min_freq`` (default 0.01), found at sketch cost
-    (operators.sketches.heavy_hitters: per-partition Misra-Gries
-    summaries + a broadcast-restricted recount — the full distinct-
-    value table is never shuffled).  Attributes ``item`` / ``cnt`` /
-    ``freq``; projection-scope output like funnel().
-
-    Multi-expression form (round-12 verdict next #7, closing the
-    sketch family's symmetry): ``heavy_hitters({a, b := expr}[,
-    min_freq])`` runs one Misra-Gries pass per listed expression and
-    labels rows with ``attr``; items are cast to text so the per-
-    expression results union into one flow (same contract as the
-    multi-expression ``freq()``)."""
-    if not args or len(args) > 2:
-        raise CompileError(
-            "heavy_hitters(expr[, min_freq]) takes 1 or 2 arguments"
-        )
-    if v.corr_outer:
-        # checked BEFORE the kernel: the Misra-Gries pass is EAGER
-        # (mapInPandas + localCheckpoint) — _fm_reshape's own guard
-        # would reject only after burning those jobs
-        raise CompileError(
-            "heavy_hitters() is not defined on a correlated sub-flow —"
-            " apply it to a top-level flow"
-        )
-    _fm_require_batch(v, "heavy_hitters")
-    from .operators.sketches import heavy_hitters
-
-    flow = v.flow
-    scope = ScopeRef(flow, flow.alias, flow.table)
-    min_freq = _fm_frac_lit(args, 1, "heavy_hitters") if len(args) == 2 else 0.01
-    if not 0 < min_freq <= 1:
-        raise CompileError("heavy_hitters() needs min_freq in (0, 1]")
-    if isinstance(args[0], N.Selection):
-        exprs = _fm_value_list(cc, ctx, scope, args[0], "heavy_hitters")
-        if any(name in ("attr", "item", "cnt", "freq") for name, _ in exprs):
-            raise CompileError(
-                "heavy_hitters() value-expression name collides with an"
-                " output attribute (attr / item / cnt / freq) — alias it"
-            )
-        parts = []
-        for name, expr in exprs:
-            narrow = flow.df.select(expr.cast("string").alias("item"))
-            parts.append(
-                heavy_hitters(narrow, "item", min_freq=min_freq).select(
-                    F.lit(name).alias("attr"), "item", "cnt", "freq"
-                )
-            )
-        res = parts[0]
-        for p in parts[1:]:
-            res = res.unionByName(p)
-        return _fm_reshape(
-            cc, v, "heavy_hitters", res, ["attr", "item", "cnt", "freq"]
-        )
-    expr = cc.scalar(ctx, scope, args[0]).col
-    narrow = flow.df.select(expr.alias("item"))
-    res = heavy_hitters(narrow, "item", min_freq=min_freq)
-    return _fm_reshape(cc, v, "heavy_hitters", res, ["item", "cnt", "freq"])
-
-
-def _fm_decontaminate(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
+def _fm_decontaminate(cc: Compiler, ctx: Ctx, v: FlowV, args, name: str):
     """decontaminate(benchmark) — drop every row whose normalized-
     content fingerprint (textstats.fingerprint, the op_contamination
     hash) appears in the BENCHMARK flow: exact-match eval-set
     decontamination as language surface, with the benchmark given as
     a full sub-query (``/documents.decontaminate(eval_docs)``,
-    ``/documents.decontaminate(documents?source='bench')``) — the
-    first flow method taking a FLOW-VALUED argument.  The benchmark's
-    distinct fingerprints broadcast (eval sets are small by nature);
-    the corpus side is one scan + a broadcast LEFT ANTI join — the
-    correct 100 TB shape."""
-    if len(args) != 1:
-        raise CompileError(
-            "decontaminate(benchmark) takes exactly one flow argument"
-        )
-    from .operators.textstats import fingerprint
-
+    ``/documents.decontaminate(documents?source='bench')``).  The
+    benchmark's distinct fingerprints broadcast (eval sets are small
+    by nature); the corpus side is one scan + a broadcast LEFT ANTI
+    join — the correct 100 TB shape."""
+    fingerprint = _op("operators.textstats.fingerprint")
     flow = v.flow
-    tcol = _fm_text_col(v, "decontaminate")
-    home = ScopeRef(cc.engine.home_flow(), "", None)
-    bench = cc.eval(ctx, home, args[0])
-    if not isinstance(bench, FlowV):
-        raise CompileError(
-            "decontaminate() needs a flow argument (a table or a"
-            " sieved table, e.g. documents?doc_id<100)"
-        )
-    bflow = bench.flow
+    bflow = _fm_flow_arg(cc, ctx, args, name, "documents?doc_id<100").flow
     if bflow.table is None or "text" not in bflow.table.columns:
         raise CompileError(
             "decontaminate() benchmark must be a flow over a table"
             " with a 'text' column"
         )
-    btext = bflow.scope_col("text")
     fpc = cc.engine.fresh("__fp")
-    fps = bflow.df.select(fingerprint(F.col(btext)).alias(fpc)).distinct()
+    fps = bflow.df.select(fingerprint(F.col(bflow.scope_col("text"))).alias(fpc)).distinct()
     flow.df = (
-        flow.df.withColumn(fpc, fingerprint(F.col(tcol)))
+        flow.df.withColumn(fpc, fingerprint(F.col(flow.scope_col("text"))))
         .join(F.broadcast(fps), fpc, "left_anti")
         .drop(fpc)
     )
     return v
 
 
-def _fm_asof(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """asof(other, on, ts, payload[, direction[, tolerance]]) —
-    append the AS-OF
-    match from another flow: for each row, the ``payload`` of the
-    ``other`` row with an equal ``on`` key nearest in ``ts``
+def _fm_asof(cc: Compiler, ctx: Ctx, v: FlowV, args, name: str):
+    """asof(other, on, ts, payload[, direction[, tolerance]]) — append
+    the AS-OF match from another flow: for each row, the ``payload``
+    of the ``other`` row with an equal ``on`` key nearest in ``ts``
     (operators.joins.asof_join — the op_asof_join kernel: tagged
     union + ordered window, NEVER an inequality join).  Appends
     ``asof_ts`` (the matched row's timestamp) and ``asof_<payload>``;
     unmatched rows keep NULLs.  ``direction`` is 'backward' (default:
-    latest other.ts <= ts), 'forward', or 'nearest'.  The second
-    flow-valued-argument method after decontaminate():
+    latest other.ts <= ts), 'forward', or 'nearest'.
     ``/(events?event_type='purchase')
     .asof(events?event_type='click', user_id, ts, event_id)``.
-    Completes F16's theta/range/as-of family in the language.
 
     Scale: both sides narrow to (key, on, ts[, payload]) before the
     union — one shuffle on the ``on`` key, one ordered window pass,
     then an id-keyed join back that ships ids + two columns."""
-    if not 4 <= len(args) <= 6:
-        raise CompileError(
-            "asof(other, on, ts, payload[, direction]) takes a flow"
-            " argument, three attribute names, an optional direction"
-            " and an optional tolerance interval"
-        )
-    from .operators.joins import asof_join
-
     flow = v.flow
-    home = ScopeRef(cc.engine.home_flow(), "", None)
-    other = cc.eval(ctx, home, args[0])
-    if not isinstance(other, FlowV):
-        raise CompileError(
-            "asof() needs a flow argument (a table or a sieved table,"
-            " e.g. events?event_type='click')"
-        )
-    for i, what in ((1, "on"), (2, "ts"), (3, "payload")):
-        if not isinstance(args[i], N.Identifier):
-            raise CompileError(
-                f"asof() {what} argument must be an attribute name"
-            )
-    direction = (
-        _fm_str_lit(args, 4, "asof") if len(args) >= 5 else "backward"
-    )
+    oflow = _fm_flow_arg(cc, ctx, args, name, "events?event_type='click'").flow
+    _fm_attr_args(args, name, ("on", "ts", "payload"))
+    direction = _fm_str_lit(args, 4, name) if len(args) >= 5 else "backward"
     if direction not in ("backward", "forward", "nearest"):
         raise CompileError(
             "asof() direction must be 'backward', 'forward' or 'nearest'"
         )
-    tolerance = (
-        _fm_interval_lit(args, 5, "asof") if len(args) == 6 else None
-    )
-    scope = ScopeRef(flow, flow.alias, flow.table)
-    oflow = other.flow
-    oscope = ScopeRef(oflow, oflow.alias, oflow.table)
+    tolerance = _fm_interval_lit(args, 5, name) if len(args) == 6 else None
+    scope, oscope = _scope(flow), _scope(oflow)
     l_on = cc.scalar(ctx, scope, args[1]).col
     l_ts = cc.scalar(ctx, scope, args[2]).col
     r_on = cc.scalar(ctx, oscope, args[1]).col
@@ -2428,7 +2240,7 @@ def _fm_asof(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
             " the matched timestamp is returned automatically"
         )
     key = _fm_survivor_key(
-        cc, ctx, v, [], "asof",
+        cc, ctx, v, [], name,
         example="apply asof() to a flow whose table declares a pk",
     )
     if "asof_ts" in v.flow.extra:
@@ -2441,32 +2253,26 @@ def _fm_asof(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
             " before matching again"
         )
     prefix = cc.engine.fresh("__ao") + "_"
-    left = flow.df.select(
-        key.alias("__ak"), l_on.alias("__on"), l_ts.alias("__ts")
-    )
+    left = flow.df.select(key.alias("__ak"), l_on.alias("__on"), l_ts.alias("__ts"))
     right = oflow.df.select(
         r_on.alias("__on"), r_ts.alias("__ts"), payload.alias(f"{prefix}{pname}")
     )
-    res = asof_join(
+    res = _op("operators.joins.asof_join")(
         left, right, on="__on", left_ts="__ts", right_ts="__ts",
         right_cols=[f"{prefix}{pname}"], direction=direction,
         tolerance=tolerance,
     )
-    matched = res.select(
-        "__ak",
-        F.col("r___ts").alias(f"{prefix}ts"),
-        f"{prefix}{pname}",
-    )
+    matched = res.select("__ak", F.col("r___ts").alias(f"{prefix}ts"), f"{prefix}{pname}")
     _fm_join_back(cc, flow, key, matched, join_key="__ak")
     _fm_register_extra(flow, [f"{prefix}ts", f"{prefix}{pname}"], prefix, "asof_")
     return v
 
 
-def _fm_within(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """within(other, on, ts, payload, other_payload, interval) —
-    reshape into the INTERVAL JOIN of two flows: one output row per
-    (left row, other row) pair with equal ``on`` whose other-``ts``
-    falls in the left row's PRECEDING ``interval``
+def _fm_within(cc: Compiler, ctx: Ctx, v: FlowV, args, name: str):
+    """within(other, on, ts, payload, other_payload, interval[,
+    watermark]) — reshape into the INTERVAL JOIN of two flows: one
+    output row per (left row, other row) pair with equal ``on`` whose
+    other-``ts`` falls in the left row's PRECEDING ``interval``
     (streaming.events.interval_join — the stream_join kernel's shape:
     ``/(events?event_type='purchase').within(events?event_type=
     'click', user_id, ts, event_id, event_id, '24 hours')`` pairs
@@ -2477,42 +2283,17 @@ def _fm_within(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     row grain — and unlike asof() it is STREAMING-LEGAL on both
     sides: under df_stream two stream-mounted flows lower to the
     watermarked stream-stream interval join (state evicted once rows
-    age past the window — bounded state at any rate), completing the
-    last kernel family that was API-only (round-11 verdict #4).
+    age past the window — bounded state at any rate).
 
     Scale: both sides narrow to (on, ts, payload) before the join;
     one shuffle each on the ``on`` key; the time predicate bounds the
     per-key match fan-out by the window."""
-    if not 6 <= len(args) <= 7:
-        raise CompileError(
-            "within(other, on, ts, payload, other_payload, interval"
-            "[, watermark]) takes a flow argument, three attribute"
-            " names of this flow/both/the other flow, an interval"
-            " literal and an optional watermark interval (streaming"
-            " state-eviction bound, default '1 hour')"
-        )
-    from .streaming.events import interval_join
-
     flow = v.flow
-    home = ScopeRef(cc.engine.home_flow(), "", None)
-    other = cc.eval(ctx, home, args[0])
-    if not isinstance(other, FlowV):
-        raise CompileError(
-            "within() needs a flow argument (a table or a sieved"
-            " table, e.g. events?event_type='click')"
-        )
-    for i, what in ((1, "on"), (2, "ts"), (3, "payload"), (4, "other_payload")):
-        if not isinstance(args[i], N.Identifier):
-            raise CompileError(
-                f"within() {what} argument must be an attribute name"
-            )
-    window = _fm_interval_lit(args, 5, "within")
-    watermark = (
-        _fm_interval_lit(args, 6, "within") if len(args) == 7 else "1 hour"
-    )
-    scope = ScopeRef(flow, flow.alias, flow.table)
-    oflow = other.flow
-    oscope = ScopeRef(oflow, oflow.alias, oflow.table)
+    oflow = _fm_flow_arg(cc, ctx, args, name, "events?event_type='click'").flow
+    _fm_attr_args(args, name, ("on", "ts", "payload", "other_payload"))
+    window = _fm_interval_lit(args, 5, name)
+    watermark = _fm_interval_lit(args, 6, name) if len(args) == 7 else "1 hour"
+    scope, oscope = _scope(flow), _scope(oflow)
     on_name = args[1].name
     lp, rp = args[3].name, args[4].name
     names = [on_name, "l_ts", f"l_{lp}", "r_ts", f"r_{rp}"]
@@ -2532,648 +2313,31 @@ def _fm_within(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
         cc.scalar(ctx, oscope, args[2]).col.alias("r_ts"),
         cc.scalar(ctx, oscope, args[4]).col.alias(f"r_{rp}"),
     )
-    res = interval_join(
+    res = _op("streaming.events.interval_join")(
         left, right, "__lon", "__ron", "l_ts", "r_ts",
         window=window, watermark=watermark,
     ).select(F.col("__lon").alias(on_name), "l_ts", f"l_{lp}", "r_ts", f"r_{rp}")
-    return _fm_reshape(cc, v, "within", res, names)
+    return _fm_reshape(cc, v, name, res, names)
 
 
-def _fm_events_cols(v: FlowV, method: str, need: tuple[str, ...]) -> dict[str, str]:
-    """The flow's physical event columns, required by the events-
-    analytics flow methods (events-shaped flows)."""
-    flow = v.flow
-    if flow.table is None or any(c not in flow.table.columns for c in need):
-        raise CompileError(
-            f"{method}() requires a flow over a table with "
-            + ", ".join(f"'{c}'" for c in need)
-            + " columns (e.g. /events)"
-        )
-    return {c: flow.scope_col(c) for c in need}
-
-
-def _fm_require_batch(v: FlowV, method: str) -> None:
-    """The EAGER model-state flow methods run compile-time Spark jobs
-    (sketch builds, per-partition counts, iterative contractions) a
-    streaming flow cannot execute — under df_stream they must fail as
-    a NAMED CompileError naming the remedy, not as the kernel's
-    opaque 'Queries with streaming sources must be executed with
-    writeStream.start()' (round-11 review; same spirit as the
-    theta_join batch-only guard)."""
-    if v.flow.df.isStreaming:
-        raise CompileError(
-            f"{method}() is batch-only — it runs compile-time model"
-            " jobs a stream cannot execute; drain the stream first"
-            " (run_stream) or query the batch mount"
-        )
-
-
-def _fm_reshape(cc: Compiler, v: FlowV, method: str, res, names: list[str]) -> FlowV:
-    """Replace the flow with the derived relation ``res`` — the first
-    RESHAPING flow methods (funnel/retention/transitions yield a
-    different row grain than their input).  The result is a
-    projection-style scope: ``names`` become the flow's attributes,
-    resolved through the kernel exactly like ``^``-quotient output, so
-    selection / sieve / sort / limit all compose after the reshape
-    (``/events.retention()?week_offset>0``)."""
-    if v.corr_outer:
-        raise CompileError(
-            f"{method}() is not defined on a correlated sub-flow —"
-            " apply it to a top-level flow"
-        )
-    prefix = cc.engine.fresh("__" + method[:3]) + "_"
-    cols = {n: prefix + n for n in names}
-    nf = Flow(
-        cc.engine,
-        res.select(*[F.col(n).alias(cols[n]) for n in names]),
-        "",
-        None,
-    )
-    nf.kernel = [(n, cols[n]) for n in names]
-    # ordered-parity: like a quotient, the reshaped relation's implicit
-    # order is its kernel (materialized only under engine.ordered or an
-    # explicit sort — compile.finalize)
-    nf.order = [(c, True) for _, c in nf.kernel]
-    v.flow = nf
-    v.corr_inner = []
-    v.singular = False
-    v.value = None
-    return v
-
-
-def _fm_funnel(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """funnel(step1, step2[, ...]) — reshape an events flow into the
-    strict-sequence funnel (operators.analytics.funnel, the op_funnel
-    kernel): one output row per step with the count of users whose
-    step-k event occurs strictly after their earliest qualifying
-    step-(k-1) event.  Attributes ``step`` / ``event_type`` /
-    ``users``; composes with a prior sieve
-    (``/events?value>=0.2 :funnel('view','click')``).  One shuffle on
-    user_id; per-user event lists stay array-local."""
-    if len(args) < 2:
-        raise CompileError(
-            "funnel(step1, step2[, ...]) takes at least two step literals"
-        )
-    from .operators.analytics import funnel
-
-    steps = [_fm_str_lit(args, i, "funnel") for i in range(len(args))]
-    cols = _fm_events_cols(v, "funnel", ("ts", "user_id", "event_type"))
-    narrow = v.flow.df.select(
-        *[F.col(c).alias(n) for n, c in cols.items()]
-    )
-    return _fm_reshape(
-        cc, v, "funnel", funnel(narrow, steps), ["step", "event_type", "users"]
-    )
-
-
-def _fm_retention(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """retention() — reshape an events flow into the weekly
-    first-touch cohort retention matrix (operators.analytics.
-    retention, the op_retention kernel): attributes ``cohort_week`` /
-    ``week_offset`` / ``users``.  Two shuffles on user_id (first
-    touch + distinct active weeks) sharing the partitioning, then one
-    on the cohort key."""
-    if args:
-        raise CompileError("retention() takes no arguments")
-    from .operators.analytics import retention
-
-    cols = _fm_events_cols(v, "retention", ("ts", "user_id"))
-    narrow = v.flow.df.select(*[F.col(c).alias(n) for n, c in cols.items()])
-    return _fm_reshape(
-        cc, v, "retention", retention(narrow),
-        ["cohort_week", "week_offset", "users"],
-    )
-
-
-def _fm_transitions(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """transitions() — reshape an events flow into next-event Markov
-    transition counts per ordered user timeline (operators.analytics.
-    transitions, the op_transitions kernel): attributes
-    ``event_type`` / ``next_type`` / ``n``.  The (ts, event_id) sort
-    key makes the sequence total and the result deterministic.  One
-    shuffle on user_id for the lead window, one for the pair count."""
-    if args:
-        raise CompileError("transitions() takes no arguments")
-    from .operators.analytics import transitions
-
-    cols = _fm_events_cols(
-        v, "transitions", ("ts", "user_id", "event_type", "event_id")
-    )
-    narrow = v.flow.df.select(*[F.col(c).alias(n) for n, c in cols.items()])
-    return _fm_reshape(
-        cc, v, "transitions", transitions(narrow),
-        ["event_type", "next_type", "n"],
-    )
-
-
-def _fm_interval_lit(args, i: int, method: str) -> str:
-    """A window/gap interval literal: 'N seconds|minutes|hours|days'.
-    Validated at compile time so a typo is a CompileError, not a
-    deep AnalysisException out of F.window."""
-    import re
-
-    s = _fm_str_lit(args, i, method)
-    if not re.fullmatch(r"[1-9]\d* (second|minute|hour|day)s?", s):
-        raise CompileError(
-            f"{method}() interval must be 'N seconds|minutes|hours|days',"
-            f" got {s!r}"
-        )
-    return s
-
-
-def _fm_tumbling(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """tumbling(interval) — reshape an events flow into epoch-aligned
-    tumbling-window aggregates (streaming.events.tumbling_counts, the
-    stream_tumbling kernel: the SAME F.window plan the stream runs):
-    attributes ``w_start`` / ``w_end`` / ``event_type`` / ``n`` /
-    ``total``.  Over a static table the watermark is a no-op, so ALL
-    windows emit — the language sees the complete history, where the
-    stream's availableNow drain emits the watermark-closed prefix.
-    Composes with a prior sieve and a following sieve/sort
-    (``/events?value>0 :tumbling('1 day')?n>5``).  One map-side-
-    combined shuffle on (window, event_type)."""
-    if len(args) != 1:
-        raise CompileError("tumbling(interval) takes exactly one interval literal")
-    window = _fm_interval_lit(args, 0, "tumbling")
-    from .streaming.events import tumbling_counts
-
-    cols = _fm_events_cols(v, "tumbling", ("ts", "event_type", "value"))
-    narrow = v.flow.df.select(*[F.col(c).alias(n) for n, c in cols.items()])
-    return _fm_reshape(
-        cc, v, "tumbling", tumbling_counts(narrow, window=window),
-        ["w_start", "w_end", "event_type", "n", "total"],
-    )
-
-
-def _fm_sliding(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """sliding(window, slide) — reshape an events flow into
-    OVERLAPPING epoch-aligned window aggregates (streaming.events.
-    sliding_event_avg, the stream_sliding kernel: the SAME
-    F.window(window, slide) plan the stream runs): attributes
-    ``w_start`` / ``avg_value`` / ``n``.  Each event lands in
-    window/slide windows; over a static table ALL windows emit
-    (complete history — the stream emits the watermark-closed
-    prefix)."""
-    if len(args) != 2:
-        raise CompileError(
-            "sliding(window, slide) takes exactly two interval literals"
-        )
-    window = _fm_interval_lit(args, 0, "sliding")
-    slide = _fm_interval_lit(args, 1, "sliding")
-    from .streaming.events import sliding_event_avg
-
-    cols = _fm_events_cols(v, "sliding", ("ts", "value"))
-    narrow = v.flow.df.select(*[F.col(c).alias(n) for n, c in cols.items()])
-    return _fm_reshape(
-        cc, v, "sliding", sliding_event_avg(narrow, window=window, slide=slide),
-        ["w_start", "avg_value", "n"],
-    )
-
-
-def _fm_sessions(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """sessions([gap]) — reshape an events flow into per-user
-    gap-based session windows (streaming.events.session_counts, the
-    stream_session kernel — the SAME F.session_window plan the stream
-    runs, deterministic over a static table): attributes ``user_id``
-    / ``s_start`` / ``s_end`` / ``n``.  Default gap '30 minutes'.
-    One shuffle on user_id; session assembly is window-local."""
-    if len(args) > 1:
-        raise CompileError("sessions([gap]) takes at most one interval literal")
-    gap = _fm_interval_lit(args, 0, "sessions") if args else "30 minutes"
-    from .streaming.events import session_counts
-
-    cols = _fm_events_cols(v, "sessions", ("ts", "user_id"))
-    narrow = v.flow.df.select(*[F.col(c).alias(n) for n, c in cols.items()])
-    return _fm_reshape(
-        cc, v, "sessions", session_counts(narrow, gap=gap),
-        ["user_id", "s_start", "s_end", "n"],
-    )
-
-
-def _fm_anomalies(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """anomalies([z[, min_n]]) — reshape an events flow into its
-    anomalous rows: values whose expanding z-score against everything
-    seen EARLIER per event type (in (ts, event_id) order) exceeds
-    ``z`` (default 3.0) after at least ``min_n`` (default 10) prior
-    observations.  Lowers to streaming.events.expanding_anomalies,
-    the value-identical batch twin of the stateful stream_anomaly
-    kernel (streaming_anomalies) — attributes ``event_id`` /
-    ``event_type`` / ``value`` / ``n_prior`` / ``z``."""
-    if len(args) > 2:
-        raise CompileError("anomalies([z[, min_n]]) takes at most two arguments")
-    z = _fm_frac_lit(args, 0, "anomalies") if args else 3.0
+def _lower_anomalies(narrow, args, name):
+    z = _fm_frac_lit(args, 0, name) if args else 3.0
     if z <= 0:
         raise CompileError("anomalies() z threshold must be positive")
-    min_n = _fm_int_lit(args, 1, 10, "anomalies")
+    min_n = _fm_int_lit(args, 1, 10, name)
     if min_n < 2:
         raise CompileError("anomalies() min_n must be at least 2")
-    cols = _fm_events_cols(
-        v, "anomalies", ("ts", "event_id", "event_type", "value")
-    )
-    narrow = v.flow.df.select(*[F.col(c).alias(n) for n, c in cols.items()])
-    if narrow.isStreaming:
-        # streaming execution mode (engine.df_stream): the unbounded-
-        # preceding window of the batch twin is not streaming-legal,
-        # so lower to the STATEFUL kernel itself — expanding (n, Σx,
-        # Σx²) per event type in the state store; one availableNow
-        # drain is value-identical to the batch twin (the r7-locked
-        # (ts, event_id) in-batch ordering)
-        from .streaming.events import streaming_anomalies
-
-        res = streaming_anomalies(narrow, z_threshold=z, min_n=min_n)
-    else:
-        from .streaming.events import expanding_anomalies
-
-        res = expanding_anomalies(narrow, z_threshold=z, min_n=min_n)
-    return _fm_reshape(
-        cc, v, "anomalies", res,
-        ["event_id", "event_type", "value", "n_prior", "z"],
-    )
+    # streaming execution mode (engine.df_stream): the unbounded-
+    # preceding window of the batch twin is not streaming-legal, so
+    # lower to the STATEFUL kernel itself — expanding (n, Σx, Σx²) per
+    # event type in the state store; one availableNow drain is
+    # value-identical to the batch twin (the locked (ts, event_id)
+    # in-batch ordering)
+    kernel = "streaming_anomalies" if narrow.isStreaming else "expanding_anomalies"
+    return _op(f"streaming.events.{kernel}")(narrow, z_threshold=z, min_n=min_n)
 
 
-def _fm_distinct_count(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """distinct_count(expr[, group...]) — reshape the flow into
-    APPROXIMATE distinct counts of ``expr`` per group (mergeable
-    Datasketches HLL, operators.sketches.hll_distinct — the
-    op_hll_distinct kernel; lgK=14 ⇒ σ≈0.8%): attributes are the
-    group names plus ``approx_distinct``.  No groups → one global
-    row.  The approximate answer the exact ``count(^)`` quotient
-    cannot give at 100 TB: the shuffle moves per-group sketches, not
-    per-row keys.  Group arguments must be attribute names (they
-    become the output attributes)."""
-    if not args:
-        raise CompileError(
-            "distinct_count(expr[, group...]) takes a value expression"
-            " and optional group attribute names"
-        )
-    from .operators.sketches import hll_distinct
-
-    flow = v.flow
-    scope = ScopeRef(flow, flow.alias, flow.table)
-    if isinstance(args[0], N.Selection):
-        # multi-expression form, like quantiles()/freq() (round 12):
-        # one HLL aggregate per listed expression under an 'attr'
-        # label — each expression keeps its own sketch accuracy
-        exprs = _fm_value_list(cc, ctx, scope, args[0], "distinct_count")
-    else:
-        exprs = [(None, cc.scalar(ctx, scope, args[0]).col)]
-    multi = len(exprs) > 1 or exprs[0][0] is not None
-    reserved = {"approx_distinct"} | ({"attr"} if multi else set())
-    if multi and any(name in reserved for name, _ in exprs):
-        raise CompileError(
-            "distinct_count() value-expression name collides with an"
-            " output attribute (attr / approx_distinct) — alias it"
-        )
-    groups: list[tuple[str, Column]] = []
-    for a in args[1:]:
-        if not isinstance(a, N.Identifier):
-            raise CompileError(
-                "distinct_count() group arguments must be attribute names"
-            )
-        if a.name in reserved:
-            # would collide with the reshape's own output attribute at
-            # execution time (ambiguous column) — name it at compile
-            # time, before resolution
-            raise CompileError(
-                f"distinct_count() group name {a.name!r} collides"
-                " with an output attribute"
-            )
-        groups.append((a.name, cc.scalar(ctx, scope, a).col))
-    if len({g for g, _ in groups}) != len(groups):
-        raise CompileError("distinct_count() names a group twice")
-    gnames = [g for g, _ in groups]
-
-    def _one(expr: Column):
-        narrow = flow.df.select(
-            expr.alias("__dc"), *[c.alias(g) for g, c in groups]
-        )
-        return hll_distinct(narrow, gnames, "__dc", lgk=14)
-
-    if not multi:
-        return _fm_reshape(
-            cc, v, "distinct_count", _one(exprs[0][1]),
-            gnames + ["approx_distinct"],
-        )
-    # the single-expression HLL streams as-is (its states ARE a
-    # streaming aggregate), but the multi form UNIONS one streaming
-    # aggregate per expression — never streaming-legal
-    if v.flow.df.isStreaming:
-        raise CompileError(
-            "multi-expression distinct_count() is batch-only — it"
-            " unions one streaming aggregate per expression; drain the"
-            " stream first (run_stream) or sketch one expression per"
-            " query"
-        )
-    parts = [
-        _one(expr).select(
-            *gnames, F.lit(name).alias("attr"), "approx_distinct"
-        )
-        for name, expr in exprs
-    ]
-    res = parts[0]
-    for p in parts[1:]:
-        res = res.unionByName(p)
-    return _fm_reshape(
-        cc, v, "distinct_count", res, gnames + ["attr", "approx_distinct"]
-    )
-
-
-def _fm_value_list(cc: Compiler, ctx: Ctx, scope: ScopeRef, node, method: str):
-    """A ``{expr, name := expr, ...}`` selection argument of a sketch
-    reshape (the multi-expression form, round-11 verdict next #7 —
-    like the agg family's mapped selections): returns ``[(name,
-    Column)]``.  Bare items must be attribute names (the name IS the
-    output label); computed expressions need an alias."""
-    out: list[tuple[str, Column]] = []
-    for item in node.items:
-        if isinstance(item, N.Identifier):
-            out.append((item.name, cc.scalar(ctx, scope, item).col))
-        elif isinstance(item, N.Assignment):
-            out.append((item.name, cc.scalar(ctx, scope, item.expr).col))
-        else:
-            raise CompileError(
-                f"{method}() selection items must be attribute names"
-                " or aliased expressions (name := expr)"
-            )
-    if len({n for n, _ in out}) != len(out):
-        raise CompileError(f"{method}() names a value expression twice")
-    if not out:
-        raise CompileError(f"{method}() selection list is empty")
-    return out
-
-
-def _fm_quantiles(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """quantiles(expr, q1[, q2...][, group...]) — reshape the flow
-    into APPROXIMATE quantile estimates of ``expr`` (mergeable KLL
-    sketch, operators.sketches.kll_sketch_states/kll_merge/
-    kll_quantiles — the op_kll_quantiles kernel, k=256): one row per
-    group (trailing attribute-name arguments; none → one global row)
-    with attributes ``n`` (exact), ``err`` (the certified worst-case
-    rank error) and one ``pXX`` estimate per requested quantile
-    (``p50`` for 0.5).  One Arrow pass builds bounded per-(partition,
-    group) states; only serialized states shuffle — the single-pass
-    answer exact percentile() cannot give at 100 TB without a full
-    sort.
-
-    Multi-expression form (round-11 verdict next #7):
-    ``quantiles({a, b := expr}, q1[, ...][, group...])`` sketches
-    EVERY listed expression — one output row per (group..., value
-    expression) with a leading ``attr`` label column, each row
-    carrying its own exact ``n``/``err`` (null counts differ per
-    expression, so the certificates are per-attr)."""
-    if len(args) < 2:
-        raise CompileError(
-            "quantiles(expr, q1[, q2...][, group...]) takes a value"
-            " expression and at least one quantile literal"
-        )
-    from .operators.sketches import kll_merge, kll_quantiles, kll_sketch_states
-
-    flow = v.flow
-    scope = ScopeRef(flow, flow.alias, flow.table)
-    if isinstance(args[0], N.Selection):
-        exprs = _fm_value_list(cc, ctx, scope, args[0], "quantiles")
-    else:
-        exprs = [(None, cc.scalar(ctx, scope, args[0]).col)]
-    # fractions first, then optional trailing group attribute names
-    import decimal
-
-    i = 1
-    qs: list[float] = []
-    while (
-        i < len(args)
-        and isinstance(args[i], N.Literal)
-        and isinstance(args[i].value, (int, float, decimal.Decimal))
-    ):
-        qs.append(_fm_frac_lit(args, i, "quantiles"))
-        i += 1
-    if not qs:
-        raise CompileError(
-            "quantiles(expr, q1[, q2...][, group...]) takes a value"
-            " expression and at least one quantile literal"
-        )
-    from .operators.sketches import kll_quantile_name
-
-    # the kernel's own formula — the collision check must reserve
-    # exactly the names the kernel will emit (round-11 review: one
-    # hand-rolled copy had survived the r10 single-sourcing)
-    multi = len(exprs) > 1 or exprs[0][0] is not None
-    reserved = {"n", "err"} | {kll_quantile_name(q) for q in qs}
-    if multi:
-        reserved.add("attr")
-    groups: list[tuple[str, Column]] = []
-    for a in args[i:]:
-        if not isinstance(a, N.Identifier):
-            raise CompileError(
-                "quantiles() group arguments must be attribute names"
-                " (after the quantile literals)"
-            )
-        if a.name in reserved:
-            # would collide with the reshape's own output attributes
-            # at execution time (ambiguous column) — name it at
-            # compile time, BEFORE resolution so the message is about
-            # the collision, not attribute existence
-            raise CompileError(
-                f"quantiles() group name {a.name!r} collides with an"
-                " output attribute (n / err / pXX"
-                + (" / attr" if multi else "") + ")"
-            )
-        groups.append((a.name, cc.scalar(ctx, scope, a).col))
-    if len({g for g, _ in groups}) != len(groups):
-        raise CompileError("quantiles() names a group twice")
-    if multi and any(name in reserved for name, _ in exprs):
-        raise CompileError(
-            "quantiles() value-expression name collides with an"
-            " output attribute (n / err / pXX / attr) — alias it"
-        )
-    for q in qs:
-        if not 0 < q <= 1:
-            raise CompileError("quantiles() fractions must be in (0, 1]")
-    if v.corr_outer:
-        # checked BEFORE the kernel (reshape scope, like funnel)
-        raise CompileError(
-            "quantiles() is not defined on a correlated sub-flow —"
-            " apply it to a top-level flow"
-        )
-    # NO batch-only guard for the SINGLE-expression form: the KLL path
-    # is fully lazy (mapInPandas states + applyInPandas merge — no
-    # driver action), and like the HLL reshape its mergeable states
-    # ARE a streaming aggregate: the reshape streams with drain parity
-    # (locked in test_streaming).  The MULTI-expression form unions
-    # one streaming aggregate per expression — never streaming-legal
-    # (Spark allows at most one streaming aggregation per query), so
-    # it fails here with the named remedy.
-    if multi and v.flow.df.isStreaming:
-        raise CompileError(
-            "multi-expression quantiles() is batch-only — it unions"
-            " one streaming aggregate per expression; drain the stream"
-            " first (run_stream) or sketch one expression per query"
-        )
-    gnames = [g for g, _ in groups]
-
-    def _one(expr: Column):
-        narrow = flow.df.select(
-            expr.cast("double").alias("__qv"), *[c.alias(g) for g, c in groups]
-        )
-        try:
-            return kll_quantiles(
-                kll_merge(
-                    kll_sketch_states(narrow, "__qv", by=gnames or None, k=256),
-                    by=gnames or None,
-                ),
-                qs,
-            )
-        except ValueError as exc:  # e.g. duplicate quantiles
-            raise CompileError(f"quantiles(): {exc}") from None
-
-    if not multi:
-        res = _one(exprs[0][1])
-        names = [
-            c for c in res.columns if c not in ("n", "err") and c not in gnames
-        ]
-        return _fm_reshape(cc, v, "quantiles", res, gnames + ["n", "err"] + names)
-    # multi-expression: one KLL pipeline per value expression (each
-    # pipeline is the same lazy Arrow pass; the union keeps every
-    # row's n/err certificate per-attr, since null counts differ),
-    # labeled by a leading 'attr' column
-    parts = []
-    pnames: list[str] | None = None
-    for name, expr in exprs:
-        r = _one(expr)
-        if pnames is None:
-            pnames = [
-                c for c in r.columns if c not in ("n", "err") and c not in gnames
-            ]
-        parts.append(
-            r.select(*gnames, F.lit(name).alias("attr"), "n", "err", *pnames)
-        )
-    res = parts[0]
-    for p in parts[1:]:
-        res = res.unionByName(p)
-    return _fm_reshape(
-        cc, v, "quantiles", res, gnames + ["attr", "n", "err"] + pnames
-    )
-
-
-def _fm_freq(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
-    """freq(expr[, group...]) — reshape the flow into APPROXIMATE
-    point-frequency estimates of ``expr`` per group (Count-Min
-    Sketch, operators.sketches.cms_build/cms_estimate — the op_cms
-    kernel; ε=0.01, δ=1e-4): one row per observed (group..., expr)
-    combination with attributes ``item`` (the expr value as text),
-    ``est_n`` (the CMS estimate — never an underestimate), ``n``
-    (the exact total row count) and ``err`` (the additive bound
-    ⌈ε·n⌉, so ``true ≤ est_n ≤ true + err`` with probability ≥ 1−δ).
-    Self-certifying like quantiles(); completes the sketch family's
-    language surface (HLL distinct_count, KLL quantiles, Misra-Gries
-    heavy_hitters, CMS freq).  Groups fold into the hashed composite,
-    so ONE depth×width matrix (a model artifact) answers every
-    grouped query — d·w longs of state at any corpus size, where the
-    exact groupBy shuffles every distinct key.  The matrix build is
-    EAGER (one Arrow pass + a tiny merge at compile time, like
-    heavy_hitters/budget); the estimate pass is map-side only."""
-    if not args:
-        raise CompileError(
-            "freq(expr[, group...]) takes a value expression and"
-            " optional group attribute names"
-        )
-    from .operators.sketches import cms_build, cms_estimate
-
-    if v.corr_outer:
-        # checked BEFORE the kernel: the sketch pass is EAGER — fail
-        # before burning its jobs
-        raise CompileError(
-            "freq() is not defined on a correlated sub-flow —"
-            " apply it to a top-level flow"
-        )
-    _fm_require_batch(v, "freq")
-    flow = v.flow
-    scope = ScopeRef(flow, flow.alias, flow.table)
-    if isinstance(args[0], N.Selection):
-        # multi-expression form (round-11 verdict next #7): one CMS
-        # matrix per listed expression, rows labeled by 'attr' — each
-        # matrix keeps its own exact-n/err certificate
-        exprs = _fm_value_list(cc, ctx, scope, args[0], "freq")
-    else:
-        exprs = [(None, cc.scalar(ctx, scope, args[0]).col)]
-    multi = len(exprs) > 1 or exprs[0][0] is not None
-    reserved = {"item", "est_n", "n", "err"}
-    if multi:
-        reserved.add("attr")
-        if any(name in reserved for name, _ in exprs):
-            raise CompileError(
-                "freq() value-expression name collides with an output"
-                " attribute (attr / item / est_n / n / err) — alias it"
-            )
-    groups: list[tuple[str, Column]] = []
-    for a in args[1:]:
-        if not isinstance(a, N.Identifier):
-            raise CompileError(
-                "freq() group arguments must be attribute names"
-            )
-        if a.name in reserved:
-            raise CompileError(
-                f"freq() group name {a.name!r} collides with an output"
-                " attribute (item / est_n / n / err)"
-            )
-        groups.append((a.name, cc.scalar(ctx, scope, a).col))
-    if len({g for g, _ in groups}) != len(groups):
-        raise CompileError("freq() names a group twice")
-    gnames = [g for g, _ in groups]
-    # composite probe key: groups fold into the hashed value so one
-    # matrix serves every group.  The encoding must be INJECTIVE for
-    # arbitrary strings (round-11 review: a separator-joined concat
-    # lets a value CONTAINING the separator alias a different
-    # combination, collapsing two distinct (group..., item) rows into
-    # one merged estimate) — so each part is length-prefixed
-    # ('S<len>:<text>', NULL → 'N'): the digit run ends at the first
-    # ':' and the length then delimits the text, so decoding is
-    # unambiguous for any value, separators and sentinels included.
-    def _piece(p: Column) -> Column:
-        return F.when(p.isNull(), F.lit("N")).otherwise(
-            F.concat(F.lit("S"), F.length(p).cast("string"), F.lit(":"), p)
-        )
-
-    eps, delta = 0.01, 1e-4
-    import math as _math
-
-    def _one(expr: Column, label: str | None):
-        parts = [c.cast("string") for _, c in groups] + [expr.cast("string")]
-        composite = F.concat(*[_piece(p) for p in parts])
-        # group attributes keep their ORIGINAL type in the output
-        # (round-11 review: only the probe key needs the string fold —
-        # a text-cast group column breaks downstream numeric sieves)
-        narrow = flow.df.select(
-            composite.alias("__ck"),
-            *[c.alias(g) for g, c in groups],
-            expr.cast("string").alias("item"),
-        )
-        matrix, _depth, _width = cms_build(narrow, "__ck", eps=eps, delta=delta)
-        n_total = int(sum(matrix[0]))  # row sums of the matrix ARE n
-        err = int(_math.ceil(eps * n_total))
-        est = cms_estimate(
-            narrow.dropDuplicates(["__ck"]), "__ck", matrix, flag="est_n"
-        )
-        label_cols = [F.lit(label).alias("attr")] if label is not None else []
-        return est.select(
-            *gnames, *label_cols, "item", "est_n",
-            F.lit(n_total).alias("n"), F.lit(err).alias("err"),
-        )
-
-    if not multi:
-        est = _one(exprs[0][1], None)
-        return _fm_reshape(
-            cc, v, "freq", est, gnames + ["item", "est_n", "n", "err"]
-        )
-    parts_out = [_one(expr, name) for name, expr in exprs]
-    est = parts_out[0]
-    for p in parts_out[1:]:
-        est = est.unionByName(p)
-    return _fm_reshape(
-        cc, v, "freq", est, gnames + ["attr", "item", "est_n", "n", "err"]
-    )
-
-
-def _fm_hist(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
+def _fm_hist(cc: Compiler, ctx: Ctx, v: FlowV, args, name: str):
     """hist(expr[, buckets]) — reshape the flow into the EXACT
     equi-depth histogram of ``expr`` (operators.olap.
     equi_depth_histogram, the op_histogram kernel): attributes
@@ -3181,80 +2345,289 @@ def _fm_hist(cc: Compiler, ctx: Ctx, outer: ScopeRef, v: FlowV, args):
     Boundaries are exact interpolated percentiles (ANSI quantile_cont
     semantics — oracle-replayable bit-for-bit); NULLs are excluded.
     Lazy (no compile-time job): one single-row boundary aggregate
-    broadcast back over the flow, then a map-side-combined count —
-    the ANALYZE-style distribution profile as language surface.  The
+    broadcast back over the flow, then a map-side-combined count.  The
     exact percentile sorts within groups at 100 TB; the kernel
-    documents the approx_percentile swap at identical plan shape."""
-    if not args or len(args) > 2:
-        raise CompileError(
-            "hist(expr[, buckets]) takes a value expression and an"
-            " optional bucket-count literal"
-        )
-    # the boundary-aggregate broadcast back over the flow is a join
-    # between two streaming frames — never streaming-legal, so fail
-    # at compile with the named remedy like freq()/heavy_hitters()
-    # (round-11 review), not at drain with Spark's opaque
-    # AnalysisException
-    _fm_require_batch(v, "hist")
-    from .operators.olap import equi_depth_histogram
-
+    documents the approx_percentile swap at identical plan shape.
+    Batch-only: the boundary-aggregate broadcast back over the flow is
+    a join between two streaming frames — never streaming-legal, so it
+    fails at compile with the named remedy, not at drain with Spark's
+    opaque AnalysisException."""
     flow = v.flow
-    scope = ScopeRef(flow, flow.alias, flow.table)
-    expr = cc.scalar(ctx, scope, args[0]).col
-    buckets = _fm_int_lit(args, 1, 4, "hist")
+    expr = cc.scalar(ctx, _scope(flow), args[0]).col
+    buckets = _fm_int_lit(args, 1, 4, name)
     if buckets < 1:
         raise CompileError("hist() bucket count must be at least 1")
-    narrow = flow.df.select(expr.alias("__h"))
-    res = equi_depth_histogram(narrow, "__h", buckets=buckets)
-    return _fm_reshape(cc, v, "hist", res, ["bucket", "lo", "hi", "n"])
+    res = _op("operators.olap.equi_depth_histogram")(
+        flow.df.select(expr.alias("__h")), "__h", buckets=buckets
+    )
+    return _fm_reshape(cc, v, name, res, ["bucket", "lo", "hi", "n"])
 
 
 FLOW_METHODS = {
-    "sort": _fm_sort,
-    "limit": _fm_limit,
-    "top": _fm_top,
-    "define": _fm_define,
-    "gopher": _fm_gopher,
-    "entropy": _fm_entropy,
-    "classify": _fm_classify,
-    "dedup_exact": _fm_dedup_exact,
-    "dedup_minhash": _fm_dedup_minhash,
-    "tfidf": _fm_tfidf,
-    "near": _fm_near,
-    "stats": _fm_stats,
-    "pii": _fm_pii,
-    "sample": _fm_sample,
-    "split": _fm_split,
-    "sessionize": _fm_sessionize,
-    "winnow": _fm_winnow,
-    "chunk": _fm_chunk,
-    "repetition": _fm_repetition,
-    "unigram": _fm_unigram,
-    "dsir": _fm_dsir,
-    "dedup_ngram": _fm_dedup_ngram,
-    "dedup_simhash": _fm_dedup_simhash,
-    "budget": _fm_budget,
-    "funnel": _fm_funnel,
-    "retention": _fm_retention,
-    "transitions": _fm_transitions,
-    "zscore": _fm_zscore,
-    "dup_spans": _fm_dup_spans,
-    "pack": _fm_pack,
-    "profile": _fm_profile,
-    "heavy_hitters": _fm_heavy_hitters,
-    "decontaminate": _fm_decontaminate,
-    "cluster": _fm_cluster,
-    "mix": _fm_mix,
-    "asof": _fm_asof,
-    "within": _fm_within,
-    "tumbling": _fm_tumbling,
-    "sliding": _fm_sliding,
-    "sessions": _fm_sessions,
-    "anomalies": _fm_anomalies,
-    "distinct_count": _fm_distinct_count,
-    "quantiles": _fm_quantiles,
-    "freq": _fm_freq,
-    "hist": _fm_hist,
+    "sort": FlowMethod(
+        "sort()", 1, None, _fm_sort, takes="needs at least one ordering key"
+    ),
+    "limit": FlowMethod("limit(n[, skip])", 1, 2, _fm_limit),
+    "top": FlowMethod("top(n[, skip])", 1, 2, _fm_limit),
+    "define": FlowMethod(
+        "define()", 1, None, _fm_define, takes="needs at least one name := expr argument"
+    ),
+    # -- appenders: one in-row pass over the text, zero shuffle ---------
+    # Gopher quality-rule signals (Rae '21), gopher_n_words … gopher_passes
+    "gopher": _appender(
+        "gopher()", _op("operators.textstats.append_gopher_signals"), "__gop", "gopher_"
+    ),
+    # lexical diversity: entropy / ttr / n_types / n_words
+    "entropy": _appender(
+        "entropy()", _op("operators.textstats.append_entropy_signals"), "__ent", ""
+    ),
+    # hashed bag-of-words linear classifier: cls_n_tokens / cls_score /
+    # cls_keep — one narrow codegen'd projection, no explode.  Named
+    # classify(), not quality(): quality(text) is the heuristic-tier
+    # SCALAR and flow methods shadow scalars in table scope.
+    "classify": _appender(
+        "classify()", _op("operators.textstats.append_classifier_signals"), "__cls", "cls_"
+    ),
+    # corpus-profile stats_tokens / _words / _chars / _punct_ratio /
+    # _quality / _langid / _fp — pure in-row expressions
+    "stats": _appender(
+        "stats()", _op("operators.textstats.append_text_stats"), "__st", "stats_"
+    ),
+    # PII redaction: pii_emails / pii_phones (match counts) and pii_clean
+    # (typed placeholders) — codegen'd regexp expressions
+    "pii": _appender(
+        "pii()", _op("operators.pipeline.append_pii_signals"), "__pii", "pii_"
+    ),
+    # Gopher-family repetition: rep_n_words / rep_dup_word_frac /
+    # rep_top_word_frac / rep_top_bigram_frac — task-local array algebra
+    "repetition": _appender(
+        "repetition()", _op("operators.textstats.append_repetition_signals"),
+        "__rep", "rep_",
+    ),
+    "dedup_exact": FlowMethod("dedup_exact([key])", 0, 1, _fm_dedup_exact, (_TEXT,)),
+    # -- pair droppers ---------------------------------------------------
+    # minhash-LSH candidates verified by shingle Jaccard >= 0.5, the same
+    # 8x4 band scheme as the op_dedup_minhash row.  reusable_cache=False:
+    # a long-lived language service compiles many distinct dedup queries,
+    # and unowned cache() entries per plan would grow executor storage
+    # without bound.
+    "dedup_minhash": _dropper(
+        "dedup_minhash([key])",
+        _op("operators.dedup.minhash_dedup_pairs", threshold=0.5, reusable_cache=False),
+    ),
+    # character-3-gram Jaccard >= 0.5 with the production hot-bucket cap
+    # (op_dedup_ngram): the (lang, length-band) bucketing is the scale
+    # story — worst case #buckets * cap^2, never all-pairs
+    "dedup_ngram": _dropper(
+        "dedup_ngram([key])",
+        _op("operators.dedup.ngram_jaccard_pairs", n=3, threshold=0.5, max_bucket=200),
+        (_TEXT, _LANG),
+    ),
+    # simhash hamming <= 3 with the PORTABLE md5 token hash
+    # (op_simhash_pairs_portable, so the tier is oracle-replayable);
+    # 4x16-bit banding guarantees recall at hamming <= 3
+    "dedup_simhash": _dropper(
+        "dedup_simhash([key])",
+        _op("operators.dedup.simhash_near_pairs", max_hamming=3, token_hash="md5"),
+    ),
+    # -- join-back scorers -----------------------------------------------
+    # top-k tf-idf terms per document (plural expansion): one explode +
+    # two map-side-combined aggregations + a shuffle join back; the term
+    # table is never broadcast by force (web-scale vocabularies are
+    # themselves huge — AQE still picks broadcast when small)
+    "tfidf": _scorer(
+        "tfidf([k[, key]])", 0, 2, _op("operators.pipeline.tfidf_top_terms"), "__tfidf",
+        ("term", "tf", ("tfidf", "score")), "tfidf_",
+        lits=(("k", 3, 1),), example="tfidf(3, doc_id)",
+    ),
+    # winnowing fingerprints (Schleimer '03, the MOSS sketch) with the
+    # portable md5 gram hash (op_winnow_portable): one row per distinct
+    # window-min gram hash, produced task-locally at scan speed
+    "winnow": _scorer(
+        "winnow([key])", 0, 1,
+        _op("operators.textstats.winnow_fingerprints", gram_hash="md5"),
+        "__wn", ("fp",), "",
+    ),
+    # unigram-LM perplexity proxy under the corpus's OWN distribution:
+    # two term-keyed shuffles (count + probe); the vocabulary is never
+    # broadcast — unbounded at 100 TB
+    "unigram": _scorer(
+        "unigram([key])", 0, 1, _op("operators.pipeline.unigram_logprob"), "__lm",
+        ("n_words", "avg_logp", "ppl"), "lm_",
+    ),
+    # DSIR importance weight (Xie '23) toward the TARGET sub-corpus, any
+    # boolean expression over the flow: one (doc, bucket) shuffle; the
+    # 1024-row log-ratio table broadcasts
+    "dsir": _scorer(
+        "dsir(target[, key])", 1, 2, _op("operators.pipeline.dsir_weights"), "__dsir",
+        ("n_grams", "logw"), "dsir_", target=True, example="dsir(target, doc_id)",
+    ),
+    # best-quality documents until n_tokens are selected, in (quality
+    # bucket desc, md5(key), key) order: histogram walk +
+    # boundary-bucket-only window, NO global sort.  Batch-only: the walk
+    # runs a small aggregation job at compile time (<= 1000 rows).
+    "budget": _scorer(
+        "budget(n_tokens[, key])", 1, 2,
+        _op("operators.pipeline.select_token_budget"), "__bud", ("q", "toks"), "budget_", lits=(("budget_tokens", 0, None),),
+        example="budget(100000, doc_id)", batch=True,
+    ),
+    # substring-level duplicated spans (Lee '21): corpus-wide verbatim
+    # 40-char windows at 8-char stride merged to maximal spans — one fp
+    # shuffle + one doc shuffle
+    "dup_spans": _scorer(
+        "dup_spans([key])", 0, 1, _op("operators.textstats.duplicated_spans"), "__sp",
+        ("n_windows", "dup_windows", "n_spans", "dup_chars", "dup_frac"), "spans_",
+    ),
+    # concat-and-chunk sequence packing: one row per (document x
+    # sequence) span; md5-derived shards each packed with one window
+    # cumsum — parallelism is the shard count, no global order
+    "pack": _scorer(
+        "pack([budget[, key]])", 0, 2, _op("operators.pipeline.pack_sequences"), "__pk",
+        ("shard", "seq_id", "offset", "take"), "pack_",
+        lits=(("budget", 64, 1),), example="pack(64, doc_id)",
+    ),
+    # -- other row-keeping methods ---------------------------------------
+    "near": FlowMethod("near(query_id[, k])", 1, 2, _fm_near, (_EMBEDDING,)),
+    "sample": FlowMethod("sample(frac[, key])", 1, 2, _fm_sample),
+    "split": FlowMethod("split([name[, key]])", 0, 2, _fm_split),
+    "sessionize": FlowMethod(
+        "sessionize([gap_minutes])", 0, 1, _fm_sessionize,
+        _events_need("ts", "user_id", "event_id"),
+    ),
+    "chunk": FlowMethod("chunk([n_tokens[, overlap]])", 0, 2, _fm_chunk, (_TEXT,)),
+    "zscore": FlowMethod(
+        "zscore(value, group[, group...])", 2, None, _fm_zscore,
+        takes="takes a value expression and at least one group expression",
+    ),
+    "profile": FlowMethod(
+        "profile(value, partition, order, tiebreak[, n_tiles])", 4, 5, _fm_profile
+    ),
+    "decontaminate": FlowMethod(
+        "decontaminate(benchmark)", 1, 1, _fm_decontaminate, (_TEXT,),
+        takes="takes exactly one flow argument",
+    ),
+    "cluster": FlowMethod("cluster([key])", 0, 1, _fm_cluster, (_TEXT, _LANG), True),
+    "mix": FlowMethod(
+        "mix(label, name1, frac1[, name2, frac2, ...])", 3, None, _fm_mix, (), True,
+        "takes a label expression and (name, fraction) literal pairs", 2,
+    ),
+    "asof": FlowMethod(
+        "asof(other, on, ts, payload[, direction])", 4, 6, _fm_asof,
+        takes="takes a flow argument, three attribute names, an optional"
+        " direction and an optional tolerance interval",
+    ),
+    # -- reshapes ----------------------------------------------------------
+    "within": FlowMethod(
+        "within(other, on, ts, payload, other_payload, interval[, watermark])",
+        6, 7, _fm_within,
+        takes="takes a flow argument, three attribute names of this"
+        " flow/both/the other flow, an interval literal and an optional"
+        " watermark interval (streaming state-eviction bound, default '1 hour')",
+    ),
+    # strict-sequence funnel (op_funnel): per step, the users whose step-k
+    # event follows their earliest step-(k-1) event; one shuffle on
+    # user_id, per-user event lists stay array-local
+    "funnel": _events(
+        "funnel(step1, step2[, ...])", 2, None, ("ts", "user_id", "event_type"),
+        ["step", "event_type", "users"],
+        lambda d, a, m: _op("operators.analytics.funnel")(
+            d, [_fm_str_lit(a, i, m) for i in range(len(a))]
+        ),
+        takes="takes at least two step literals",
+    ),
+    # weekly first-touch cohort retention (op_retention): two shuffles on
+    # user_id sharing the partitioning, then one on the cohort key
+    "retention": _events(
+        "retention()", 0, 0, ("ts", "user_id"), ["cohort_week", "week_offset", "users"],
+        lambda d, a, m: _op("operators.analytics.retention")(d),
+    ),
+    # next-event Markov transition counts (op_transitions); the (ts,
+    # event_id) sort key makes the sequence total and the result
+    # deterministic: one shuffle for the lead window, one for the count
+    "transitions": _events(
+        "transitions()", 0, 0, ("ts", "user_id", "event_type", "event_id"),
+        ["event_type", "next_type", "n"],
+        lambda d, a, m: _op("operators.analytics.transitions")(d),
+    ),
+    # the SAME F.window plans the stream kernels run (stream_tumbling /
+    # stream_sliding / stream_session).  Over a static table the
+    # watermark is a no-op, so ALL windows emit — the language sees the
+    # complete history, where the stream's availableNow drain emits the
+    # watermark-closed prefix.  Tumbling: one map-side-combined shuffle on
+    # (window, event_type); sessions: one shuffle on user_id.
+    "tumbling": _events(
+        "tumbling(interval)", 1, 1, ("ts", "event_type", "value"),
+        ["w_start", "w_end", "event_type", "n", "total"],
+        lambda d, a, m: _op("streaming.events.tumbling_counts")(
+            d, window=_fm_interval_lit(a, 0, m)
+        ),
+        takes="takes exactly one interval literal",
+    ),
+    "sliding": _events(
+        "sliding(window, slide)", 2, 2, ("ts", "value"), ["w_start", "avg_value", "n"],
+        lambda d, a, m: _op("streaming.events.sliding_event_avg")(
+            d, window=_fm_interval_lit(a, 0, m), slide=_fm_interval_lit(a, 1, m)
+        ),
+        takes="takes exactly two interval literals",
+    ),
+    "sessions": _events(
+        "sessions([gap])", 0, 1, ("ts", "user_id"), ["user_id", "s_start", "s_end", "n"],
+        lambda d, a, m: _op("streaming.events.session_counts")(
+            d, gap=_fm_interval_lit(a, 0, m) if a else "30 minutes"
+        ),
+        takes="takes at most one interval literal",
+    ),
+    # expanding per-event-type z-score against everything seen EARLIER
+    # in (ts, event_id) order: the value-identical batch twin of the
+    # stateful stream_anomaly kernel
+    "anomalies": _events(
+        "anomalies([z[, min_n]])", 0, 2, ("ts", "event_id", "event_type", "value"),
+        ["event_id", "event_type", "value", "n_prior", "z"], _lower_anomalies,
+    ),
+    # -- sketch reshapes: the single-pass answers exact queries cannot
+    # give at 100 TB — only per-partition states shuffle ------------------
+    # HLL distinct counts (op_hll_distinct, lgK=14 => sigma ~0.8%): the
+    # shuffle moves per-group sketches, not per-row keys
+    "distinct_count": _sketch(
+        "distinct_count(expr[, group...])", 1, None,
+        "takes a value expression and optional group attribute names",
+        _hll_one, lambda _: ["approx_distinct"],
+    ),
+    # KLL quantiles (op_kll_quantiles, k=256): exact n, certified rank
+    # error err, one pXX per fraction.  One lazy Arrow pass builds
+    # bounded per-(partition, group) states (mapInPandas states +
+    # applyInPandas merge, no driver action), so the single form streams
+    # with drain parity; the certificates are per-attr in the multi form
+    # because null counts differ per expression
+    "quantiles": _sketch(
+        "quantiles(expr, q1[, q2...][, group...])", 2, None,
+        "takes a value expression and at least one quantile literal",
+        _kll_one, _kll_outs, _kll_lead,
+    ),
+    # EXACT frequent items at sketch cost (per-partition Misra-Gries
+    # summaries + a broadcast-restricted recount — the distinct-value
+    # table is never shuffled).  Batch-only: the pass is EAGER
+    # (mapInPandas + localCheckpoint).
+    "heavy_hitters": _sketch(
+        "heavy_hitters(expr[, min_freq])", 1, 2, None,
+        _mg_one, lambda _: ["item", "cnt", "freq"], _mg_lead, True,
+    ),
+    # Count-Min point frequencies (op_cms, eps=0.01, delta=1e-4): est_n
+    # never underestimates, err = ceil(eps * n) bounds the overestimate
+    # with probability >= 1 - delta.  Groups fold into the hashed
+    # composite, so ONE depth x width matrix (d*w longs at any corpus
+    # size) answers every grouped query.  Batch-only: the matrix build
+    # is EAGER (one Arrow pass + a tiny merge at compile time); the
+    # estimate pass is map-side only.
+    "freq": _sketch(
+        "freq(expr[, group...])", 1, None,
+        "takes a value expression and optional group attribute names",
+        _cms_one, lambda _: ["item", "est_n", "n", "err"], batch=True,
+    ),
+    "hist": FlowMethod(
+        "hist(expr[, buckets])", 1, 2, _fm_hist, (), True,
+        "takes a value expression and an optional bucket-count literal",
+    ),
 }
 
 

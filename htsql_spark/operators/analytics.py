@@ -474,13 +474,14 @@ def apply_cdc(
     operator with a scale-shaped plan.
 
     100 TB posture: the snapshot side is NEVER shuffled.  Last-writer
-    resolution windows over the (batch-sized) ``changes`` only, and
-    the snapshot is filtered by a left-anti join against the batch's
-    key SET — one narrow column, broadcast by default, so even a
-    wide multi-million-row change batch costs the snapshot a single
-    map-side pass.  Set ``broadcast_keys=False`` only when the batch
-    key set itself is too large to broadcast (then the anti join
-    shuffles both sides on ``key``).
+    resolution aggregates over the (batch-sized) ``changes`` only
+    (one ``max_by`` hash aggregation plus a distinct of the batch
+    keys), and the snapshot is filtered by a left-anti join against
+    the batch's key SET — one narrow column, broadcast by default, so
+    even a wide multi-million-row change batch costs the snapshot a
+    single map-side pass.  Set ``broadcast_keys=False`` only when the
+    batch key set itself is too large to broadcast (then the anti
+    join shuffles both sides on ``key``).
 
     Determinism: ties on ``ts_col`` break by ``op_col`` descending
     ('U' beats 'I' beats 'D' in ASCII), so equal-timestamp batches
@@ -488,7 +489,10 @@ def apply_cdc(
     should encode it in ``ts_col`` (a (ts, seq) epoch works).  Full
     (ts, op) ties are outside the contract for VALUE purposes (any of
     the tied rows may win) — exactly the window-shape behavior this
-    aggregation replaced.
+    aggregation replaced.  A NULL ``ts_col`` ranks below every
+    timestamp and a NULL ``op_col`` below every op at its timestamp;
+    a NULL-op change that still wins removes the key like a delete
+    (it is not an upsert value).
 
     r14 shape: last-writer resolution is ONE hash aggregation —
     ``max_by`` of the payload ranked by ``struct(ts, op)``

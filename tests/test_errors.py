@@ -9,6 +9,7 @@ import pytest
 import yaml
 
 from htsql_spark import CompileError
+from htsql_spark.compile import FLOW_METHODS
 from htsql_spark.syntax.parse import ParseError
 
 _CORPUS = os.path.join(os.path.dirname(__file__), "golden", "errors.yaml")
@@ -27,6 +28,35 @@ def test_error_corpus(db, case):
     assert case["needle"] in str(ei.value), (
         f"{case['q']!r}: expected {case['needle']!r} in {ei.value}"
     )
+
+
+_FLOW_METHODS = sorted(FLOW_METHODS.items())
+
+
+@pytest.mark.parametrize("name,m", _FLOW_METHODS, ids=[n for n, _ in _FLOW_METHODS])
+def test_flow_method_arity_error_names_the_method(db, name, m):
+    """Every FLOW_METHODS row rejects one argument past its range (one
+    short of it when unbounded) with an error naming the method the user
+    called — ``top()`` once reported ``limit(n[, skip])``."""
+    n = m.hi + 1 if m.hi is not None else m.lo - 1
+    with pytest.raises(CompileError) as ei:
+        db.df(f"/documents.{name}({', '.join(['1'] * n)})")
+    assert str(ei.value).startswith(f"{name}("), str(ei.value)
+
+
+@pytest.mark.parametrize(
+    "name,m",
+    [(n, m) for n, m in _FLOW_METHODS if m.needs],
+    ids=[n for n, m in _FLOW_METHODS if m.needs],
+)
+def test_flow_method_required_columns(db, name, m):
+    """A row's required columns are checked before its binder runs:
+    /region has none of them."""
+    with pytest.raises(CompileError) as ei:
+        db.df(f"/region.{name}({', '.join(['1'] * m.lo)})")
+    assert str(ei.value).startswith(
+        f"{name}() requires a flow over a table with"
+    ), str(ei.value)
 
 
 def test_plural_in_singular_names_the_fix(db):
